@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock.
   *
@@ -9,19 +7,20 @@ import org.apache.spark.sql.SparkSession
   * AQE on — the same settings a real cluster deployment would scale out.
   */
 object Bench {
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    // newline runs collapse to one space (readability of exception text);
-    // every OTHER control char must be \u-escaped or the record is
-    // invalid JSON and unreadable by the driver
-    s.replaceAll("[\\r\\n\\t]+", " ").foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR left raw (in builder-authored oracle SQL, an
+    * exception message, an env-supplied field) makes the record invalid
+    * JSON that the driver silently drops. Newlines stay `\n`, not
+    * spaces, so a `--` comment in oracle SQL keeps ending its line. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** True when a JVM arg vector names a Spark/graft MAIN — matched on
     * whole argument tokens, never substrings of the classpath (a test
@@ -145,7 +144,7 @@ object Bench {
       sfDir: String, master: String, shuffleParts: String, policy: String,
       canaryStart: Double, canaryEnd: Double, contentionJson: String,
       gitSha: String, stamp: String, fullJsonPath: String): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,"n_ok":$nOk,"n_errors":${nQueries - nOk},"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"shuffle_partitions":"$shuffleParts","samples_policy":"$policy","ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,"git_sha":"$gitSha","timestamp":"$stamp","full_json":${jsonStr(fullJsonPath)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,"n_ok":$nOk,"n_errors":${nQueries - nOk},"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"shuffle_partitions":${jsonStr(shuffleParts)},"samples_policy":${jsonStr(policy)},"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)},"full_json":${jsonStr(fullJsonPath)}}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -180,83 +179,13 @@ object Bench {
       math.max(cpus.toInt, math.min(512L, fixtureBytes >> 27).toInt).toString)
     // SPARK_GRAFT_MASTER: multi-JVM probe hook (see Verify) — e.g.
     // local-cluster[2,16,4096] runs executor processes, crossing a real
-    // serialization/classloader boundary; ship this JVM's classpath since
-    // executor JVMs don't inherit it.
+    // serialization/classloader boundary. SPARK_GRAFT_CONF overrides are
+    // for local A/B probes; the driver never sets it, so the contract run
+    // keeps the engine session (non-default runs never overwrite
+    // target/bench.json, see defaultRun below).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-bench")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // also split skewed partitions when the join feeds a same-key
-      // aggregate (the extra exchange it introduces is bounded by the
-      // agg's output, while the straggler it removes is bounded by the
-      // hot key's row count — at scale the straggler always costs more);
-      // without this, OptimizeSkewedJoin silently declines exactly the
-      // join→groupBy shape most pipeline queries have (join_skew_zipf)
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      // skew detection sized to this box: the 256m default assumes
-      // multi-GB executor shuffles; on 32 local cores a straggler
-      // partition is painful well before that (join_skew_zipf's hot key
-      // is ~100m compressed at sf10 — invisible to the default)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      // Runtime broadcast decisions follow the same 64 MB policy as
-      // Relational.dim(): a FILTERED dimension (part LIKE '%PROMO%',
-      // date-sliced orders) is invisible to file-stat sizing — the
-      // static threshold stays at Spark's default — but AQE sees the
-      // true post-shuffle bytes and can convert the join, sparing the
-      // fact side a 600 M-row exchange (q8-class shapes at sf100).
-      // 64 MB compressed ≈ what a 4 GB-executor cluster wants shipped.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE_BROADCAST", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Shuffle WRITER unification (r14, measured): with ≤200 reduce
-      // partitions and no map-side aggregation Spark's sort-shuffle
-      // takes the bypass-merge path — numPartitions OPEN FILES PER MAP
-      // TASK, concatenated at the end. Every legacy-threshold shuffle
-      // here (32 partitions at fixture scale, 121 at sf100) therefore
-      // paid 32-121 small file creates per map task, ~8.5 ms/task on
-      // this box (MicroFloor attribution: the cost IS shuffle write
-      // time; join_full 0.56→0.35 s, graph_pagerank's worst leg 19.4→
-      // 2.8 s once forced off). Threshold 0 forces the serialized
-      // UnsafeShuffleWriter — one data+index file per map task — which
-      // is EXACTLY the writer any >200-partition production shuffle
-      // already uses, so fixture-scale legs now measure the same write
-      // path a cluster runs. Overridable via SPARK_GRAFT_CONF.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // Subset-key co-partitioning (r14): the KN3 scale path pins its
-      // model pipeline to HashPartitioning(v) so five vocabulary-sized
-      // exchanges collapse into one (guide §2.4) — but Spark's default
-      // requireAllClusterKeysForCoPartition=true refuses to join two
-      // children co-partitioned on a key SUBSET and re-exchanges both
-      // on the full key set. false restores the subset behavior; the
-      // co-partitioned sides pin their partition count to
-      // spark.sql.shuffle.partitions, so join parallelism is unchanged.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF=k=v;k=v — extra session confs for LOCAL A/B
-    // probes (same hook PlanDump/the profilers expose; the driver never
-    // sets it, so the contract run keeps the exact session above).
-    // Non-default runs never overwrite target/bench.json (see defaultRun
-    // below, which treats a set SPARK_GRAFT_CONF as non-default).
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
-        if (k.nonEmpty) builder.config(k, v)
-      }
-    val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        sys.props("java.class.path"))
-        // executor heap for the multi-JVM probe (default 1g): the worker
-        // memory figure in the master string is a capacity, not the heap
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "1g"))
-    else builder).getOrCreate()
+    val spark = GraftContext.envSessionBuilder(master, shuffleParts.toInt)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the session (JVM/codegen/catalog init, parquet reader, hash-agg
@@ -627,7 +556,7 @@ object Bench {
         (Runtime.getRuntime.maxMemory >> 30) + "g(driver-heap)")
     val stamp = java.time.Instant.now().toString
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":"$sfDir","master":"$master","executor_memory":"$executorMem","git_sha":"$gitSha","timestamp":"$stamp"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
     println(json)
     // the stdout line overflows log-tail captures (the driver's BENCH_r*
     // 'parsed' field has been null every round) — also write the JSON to a

@@ -999,9 +999,106 @@ object GraftContext {
     else "parquet"
   }
 
-  /** Session builder with the scale-appropriate defaults for this engine:
-    * AQE on (runtime re-planning ≈ the reference's row-estimate adaptive
-    * kernels), shuffle partitions sized for the local harness.
+  /** The engine's session: the ONE definition of its confs. Every entry
+    * point builds from here — [[buildSession]], Bench, Verify, PlanDump,
+    * the test suite and the `graft.tools` mains — so the session that is
+    * oracle-checked is the one that is benched and the one that ships.
+    * Callers add only what is theirs on top (Hive, an experiment's
+    * override); shuffle partitions stay a caller argument because each
+    * sizes them differently (Bench to the data, Verify to the cores).
+    */
+  def sessionBuilder(master: String,
+      shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .appName("graft")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // AQE: runtime re-planning ≈ the reference's row-estimate adaptive
+      // kernels
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // also split skewed partitions when the join feeds a same-key
+      // aggregate (the extra exchange it introduces is bounded by the
+      // agg's output, while the straggler it removes is bounded by the
+      // hot key's row count — at scale the straggler always costs more);
+      // without this, OptimizeSkewedJoin silently declines exactly the
+      // join→groupBy shape most pipeline queries have (join_skew_zipf)
+      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+      // skew detection sized to a 32-core box: the 256m default assumes
+      // multi-GB executor shuffles; on 32 local cores a straggler
+      // partition is painful well before that (join_skew_zipf's hot key
+      // is ~100m compressed at sf10 — invisible to the default)
+      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
+      // Runtime broadcast decisions follow the same 64 MB policy as
+      // Relational.dim(): a FILTERED dimension (part LIKE '%PROMO%',
+      // date-sliced orders) is invisible to file-stat sizing — the
+      // static threshold stays at Spark's default — but AQE sees the
+      // true post-shuffle bytes and can convert the join, sparing the
+      // fact side a 600 M-row exchange (q8-class shapes at sf100).
+      // 64 MB compressed ≈ what a 4 GB-executor cluster wants shipped.
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Shuffle WRITER unification (r14, measured): with ≤200 reduce
+      // partitions and no map-side aggregation Spark's sort-shuffle
+      // takes the bypass-merge path — numPartitions OPEN FILES PER MAP
+      // TASK, concatenated at the end. At 32-121 partitions that cost
+      // ~8.5 ms/task in small file creates on a 32-core box (MicroFloor
+      // attribution; join_full 0.56→0.35 s, graph_pagerank's worst leg
+      // 19.4→2.8 s once forced off). Threshold 0 forces the serialized
+      // UnsafeShuffleWriter — one data+index file per map task — which
+      // is EXACTLY the writer any >200-partition production shuffle
+      // already uses. A core conf: it must be set before the context
+      // starts, so only a builder can set it.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // Subset-key co-partitioning (r14): the KN3 scale path pins its
+      // model pipeline to HashPartitioning(v) so five vocabulary-sized
+      // exchanges collapse into one (guide §2.4) — but Spark's default
+      // requireAllClusterKeysForCoPartition=true refuses to join two
+      // children co-partitioned on a key SUBSET and re-exchanges both
+      // on the full key set. false restores the subset behavior; the
+      // co-partitioned sides pin their partition count to
+      // spark.sql.shuffle.partitions, so join parallelism is unchanged.
+      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+
+  /** [[sessionBuilder]] plus the environment hooks the mains share (never
+    * [[buildSession]], which reads no environment):
+    *   - a `local-cluster[...]` master runs executor JVMs that do not
+    *     inherit this classpath, so ship it, with SPARK_GRAFT_EXECUTOR_MEM
+    *     as their heap (default 1g; the worker memory in the master
+    *     string is a capacity, not the heap);
+    *   - with `confOverrides`, SPARK_GRAFT_CONF=k=v;k=v sets extra confs
+    *     for local A/B probes (e.g. forcing a size-gated scale path on a
+    *     tiny fixture). Verify passes false: the oracle-checked session
+    *     is always the engine's.
+    */
+  def envSessionBuilder(master: String, shufflePartitions: Int,
+      confOverrides: Boolean = true): SparkSession.Builder = {
+    val builder = sessionBuilder(master, shufflePartitions)
+    if (master.startsWith("local-cluster"))
+      builder.config("spark.executor.extraClassPath",
+          sys.props("java.class.path"))
+        .config("spark.executor.memory",
+          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "1g"))
+    if (confOverrides)
+      parseConfs(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+        .foreach { case (k, v) => builder.config(k, v) }
+    builder
+  }
+
+  /** `k=v;k=v` → conf pairs. Entries with no `=`, an empty key or an
+    * empty value are skipped (an empty key would crash the builder);
+    * the value is everything after the FIRST `=`. */
+  private[graft] def parseConfs(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.flatMap { kv =>
+      val i = kv.indexOf('=')
+      val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
+      if (i > 0 && k.nonEmpty && v.nonEmpty) Some(k -> v) else None
+    }
+
+  /** The engine session ([[sessionBuilder]]) built for in-process use.
     * `hive = true` backs the catalog with a Hive metastore
     * (`enableHiveSupport`) so existing warehouse tables — schema AND
     * partitions — resolve by name, like the reference's
@@ -1009,16 +1106,7 @@ object GraftContext {
     */
   def buildSession(master: String = "local[32]",
       shufflePartitions: Int = 32, hive: Boolean = false): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = sessionBuilder(master, shufflePartitions)
     val spark = (if (hive) builder.enableHiveSupport() else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for named queries (or all).
   * Usage: runMain graft.PlanDump <sfDir> [queryName ...]
   */
@@ -10,22 +8,9 @@ object PlanDump {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_CONF=k=v;k=v — extra session confs, e.g. forcing the
     // size-gated LSH scale path on a tiny fixture so its plan is dumpable
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
-        if (k.nonEmpty) builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+    val spark = GraftContext.envSessionBuilder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=================== $n ===================")

@@ -857,8 +857,9 @@ object TextAnalysis {
     // v-partitioned (explicit count — co-partition compatibility needs
     // equal partition counts), matching the model side, so
     // EnsureRequirements adds no exchange. Requires the session conf
-    // spark.sql.requireAllClusterKeysForCoPartition=false (set by
-    // Bench; Spark's default true refuses subset-key co-partitioning)
+    // spark.sql.requireAllClusterKeysForCoPartition=false (an engine
+    // conf, GraftContext.sessionBuilder; Spark's default true refuses
+    // subset-key co-partitioning)
     // — with it true the plan degrades to the r13 full-key exchanges,
     // never to a wrong result.
     val triJ = if (scaleGate) tri.repartition(vParts, col("v")) else tri

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Production-merge-count probe for batched BPE training
   * (`runMain graft.tools.BpeScaleBench <sfDir> [merges] [batch]`).
   *
@@ -18,15 +16,9 @@ object BpeScaleBench {
     val sfDir = args(0)
     val merges = if (args.length > 1) args(1).toInt else 512
     val batch = if (args.length > 2) args(2).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-bpe-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables.load(spark, sfDir, "documents")

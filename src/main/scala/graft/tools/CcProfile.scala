@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage decomposition for dedup_clusters at a given SF
   * (`runMain graft.tools.CcProfile <sfDir>`): runs the full query with
   * `spark.graft.components.log=true`, so the per-stage breakdown
@@ -11,21 +9,9 @@ import org.apache.spark.sql.SparkSession
 object CcProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-ccprofile")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftContext.envSessionBuilder("local[32]",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121").toInt)
       .config("spark.graft.components.log", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // signature-pass-only slice: the k=128 fused minhash kernel over the

@@ -33,17 +33,11 @@ object ChaosCluster {
   }
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,2048]"))
-      .appName("graft-chaos")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
+    val s = graft.GraftContext.envSessionBuilder(
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,2048]"), 16)
+      // this probe's executors default to 2g (envSessionBuilder: 1g)
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "2g"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

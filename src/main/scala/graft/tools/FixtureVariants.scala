@@ -137,13 +137,8 @@ object FixtureVariants {
 
   def main(args: Array[String]): Unit = {
     val (srcDir, outRoot) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, srcDir, outRoot)
     println(s"[fixture-variants] wrote variant dirs under $outRoot")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import java.util.concurrent.atomic.AtomicLong
 
 /** Per-query floor decomposition (`runMain graft.tools.FloorProfile
@@ -13,9 +11,9 @@ import java.util.concurrent.atomic.AtomicLong
   * jobs/stages/tasks each execution schedules — so the floor attack
   * targets what the floor is actually made of instead of guessing.
   *
-  * Mirrors Bench's session confs exactly (same AQE settings, 32 shuffle
-  * partitions at fixture scale) so the decomposition prices the same
-  * plans the bench times.
+  * Runs the engine session (GraftContext.sessionBuilder, as Bench does;
+  * shuffle partitions = cores unless SPARK_GRAFT_SHUFFLE) so the
+  * decomposition prices the same plans the bench times.
   */
 object FloorProfile {
   def main(args: Array[String]): Unit = {
@@ -23,27 +21,8 @@ object FloorProfile {
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-floorprofile")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicLong
 
@@ -9,35 +8,16 @@ import java.util.concurrent.atomic.AtomicLong
   * query shapes (scan-agg, two-stage groupBy, broadcast join, global
   * sort) in a steady-state loop, so the per-execution overhead of plan
   * → AQE stage round-trips → scheduling is measured in isolation from
-  * any real compute. Confs mirror Bench; SPARK_GRAFT_CONF overrides let
-  * the same shapes be priced under candidate settings.
+  * any real compute. Runs the engine session (as Bench does);
+  * SPARK_GRAFT_CONF overrides let the same shapes be priced under
+  * candidate settings.
   */
 object MicroFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-microfloor")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
-        if (k.nonEmpty) builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
 

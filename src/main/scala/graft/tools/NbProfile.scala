@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -22,23 +21,8 @@ object NbProfile {
     val sfDir = args(0)
     val samples = if (args.length > 1) args(1).toInt else 3
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-nbprofile")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "1g"))
-    else builder).getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(master,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[A](f: => A): (Double, A) = {

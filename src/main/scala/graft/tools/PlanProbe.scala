@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the executed plan of registered queries without running them
   * (`runMain graft.tools.PlanProbe <sfDir> <query>[,query...] [full]`).
   * Default output keeps the join/exchange/sort/scan skeleton — the
@@ -13,16 +11,9 @@ import org.apache.spark.sql.SparkSession
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanProbe <sfDir> <q1[,q2...]> [full]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-planprobe")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val full = args.length > 2 && args(2) == "full"
     args(1).split(',').foreach { name =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-sample decomposition for the two unexplained multi-JVM heavy
@@ -23,25 +22,8 @@ object PrProfile {
     val sfDir = args(0)
     val samples = if (args.length > 1) args(1).toInt else 5
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-prprofile")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "1g"))
-    else builder).getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(master,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val blockingRelease = sys.env.get("GRAFT_PR_BLOCKING_RELEASE").contains("1")
 

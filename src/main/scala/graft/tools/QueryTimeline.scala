@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
 
 /** Intra-query wall-clock timeline (`runMain graft.tools.QueryTimeline
@@ -9,8 +7,8 @@ import scala.collection.mutable
   * for the LAST run, every stage's [submit, complete] window relative
   * to execution start plus the gaps — so the ~0.3 s per-query floor can
   * be attributed to stage compute vs the driver-side seams between
-  * stages (AQE replan, codegen, broadcast builds). Session mirrors
-  * Bench.
+  * stages (AQE replan, codegen, broadcast builds). Runs the engine
+  * session, as Bench does.
   */
 object QueryTimeline {
   def main(args: Array[String]): Unit = {
@@ -18,28 +16,8 @@ object QueryTimeline {
     val name = args(1)
     val n = if (args.length > 2) args(2).toInt else 8
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-querytimeline")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
-        if (k.nonEmpty) builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -42,13 +42,8 @@ object ScaleData {
     require(args.length >= 2, "usage: ScaleData <srcDir> <outDir> [factor]")
     val (src, out) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaledata")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String): DataFrame = Tables.load(spark, src, name)

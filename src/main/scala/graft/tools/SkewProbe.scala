@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-skew probe (`runMain graft.tools.SkewProbe <sfDir> [out.json]`):
@@ -41,16 +41,11 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SkewProbe <sfDir> [out.json]")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions", "200")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // detection threshold sized to this box: the default 256m assumes
-      // multi-GB executor shuffles; the planted hot partition is ~100m
-      // COMPRESSED (zkey=1 runs compress ~8x) and would sit under the
-      // default forever. 32m threshold + 16m split target ≈ the ratio a
+    val spark = graft.GraftContext.envSessionBuilder(
+        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 200)
+      // detection threshold below the engine's 64m: the planted hot
+      // partition is ~100m COMPRESSED (zkey=1 runs compress ~8x) and must
+      // sit well above it. 32m threshold + 16m split target ≈ the ratio a
       // large cluster sees with the defaults at 10x the data.
       .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
@@ -59,8 +54,6 @@ object SkewProbe {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off stage decomposition for the sf100 tail queries
   * (`runMain graft.tools.TailProfile <sfDir>`): times the pre-exchange
   * slice of q16 (part scan → filter → 4-way explode, no aggregate) and
@@ -10,23 +8,8 @@ import org.apache.spark.sql.SparkSession
 object TailProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-tailprofile")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench's session exactly — the 64 MB adaptive broadcast
-      // threshold alone is a 3× q16 delta (measured 11.4 vs 3.5 s)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftContext.envSessionBuilder("local[32]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "121").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
       val secs = (1 to 2).map { _ =>

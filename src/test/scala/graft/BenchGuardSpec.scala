@@ -121,6 +121,29 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(parsed.get("git_sha").asText().startsWith("921f2216"))
   }
 
+  test("compactLine stays well-formed when string fields carry quotes and backslashes") {
+    // every string field goes through Bench.jsonStr, not raw interpolation
+    val odd = "12\"3\\4"
+    val line = Bench.compactLine(
+      total = 1.5, nQueries = 2, nOk = 2,
+      sfDir = "/data/sf\"x", master = "local[4]",
+      shuffleParts = odd, policy = "all\tpolicy",
+      canaryStart = 0.1, canaryEnd = 0.2,
+      contentionJson = """"contended":false""", gitSha = "abc\\def",
+      stamp = "2026-01-01T00:00:00Z\n", fullJsonPath = "/tmp/b.json")
+    assert(!line.contains("\n"))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    assert(parsed.get("shuffle_partitions").asText() == odd)
+    assert(parsed.get("samples_policy").asText() == "all\tpolicy")
+    assert(parsed.get("sf").asText() == "/data/sf\"x")
+    assert(parsed.get("git_sha").asText() == "abc\\def")
+    assert(parsed.get("timestamp").asText() == "2026-01-01T00:00:00Z\n")
+    // newlines are escaped, not collapsed: a `--` comment in oracle SQL
+    // must keep ending its line after the round trip
+    assert(Bench.jsonStr("-- c\nSELECT 1") == """"-- c\nSELECT 1"""")
+  }
+
   test("foreignSparkJvms tolerates a truncated process table (no cycles)") {
     // a pid whose ppid is missing from the scan (raced exit) must not
     // loop or throw; parent defaults to init

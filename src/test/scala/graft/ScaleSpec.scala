@@ -412,8 +412,10 @@ class ScaleSpec extends SparkSuite {
     // be moot — pin broadcasts off so strategy choice is visible
     val bcast = "spark.sql.autoBroadcastJoinThreshold"
     val prevBcast = spark.conf.get(bcast)
+    val aqeBcast = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val prevAqeBcast = spark.conf.getOption(aqeBcast)
     spark.conf.set(bcast, "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(aqeBcast, "-1")
     try {
       val kn3 = SparkEntry.queries("text_perplexity_kn3")(spark, sfDir)
         .queryExecution.executedPlan.toString
@@ -428,7 +430,10 @@ class ScaleSpec extends SparkSuite {
     } finally {
       spark.conf.unset(key)
       spark.conf.set(bcast, prevBcast)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      prevAqeBcast match {
+        case Some(v) => spark.conf.set(aqeBcast, v)
+        case None => spark.conf.unset(aqeBcast)
+      }
       operators.Dedup.releaseCaches()
     }
   }
@@ -443,9 +448,12 @@ class ScaleSpec extends SparkSuite {
       .collect().map(r => r.toString).sorted
     operators.Dedup.releaseCaches()
     spark.conf.set(key, "0")
-    // the exact production session: Bench sets subset co-partitioning
-    // (the plan the sf100 legs run); correctness must hold under it
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    // the exact production session: the engine sets subset
+    // co-partitioning (the plan the sf100 legs run); correctness must
+    // hold under it
+    val coPart = "spark.sql.requireAllClusterKeysForCoPartition"
+    val prevCoPart = spark.conf.getOption(coPart)
+    spark.conf.set(coPart, "false")
     try {
       val scaled = SparkEntry.queries("text_perplexity_kn3")(spark, sfDir)
         .collect().map(r => r.toString).sorted
@@ -454,7 +462,10 @@ class ScaleSpec extends SparkSuite {
         s"first diff: ${scaled.zip(direct).find(p => p._1 != p._2)}")
     } finally {
       spark.conf.unset(key)
-      spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
+      prevCoPart match {
+        case Some(v) => spark.conf.set(coPart, v)
+        case None => spark.conf.unset(coPart)
+      }
       operators.Dedup.releaseCaches()
     }
   }

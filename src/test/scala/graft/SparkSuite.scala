@@ -14,14 +14,8 @@ object SparkSuite {
     // failures and assert operator determinism under retry — the
     // recompute semantics a 1000-executor cluster exercises constantly.
     // With no failing task the scheduler behaves exactly like local[8].
-    val s = SparkSession.builder()
-      .master("local[8, 3]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // Everything else is the engine session (GraftContext.sessionBuilder).
+    val s = GraftContext.sessionBuilder("local[8, 3]", 8)
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=/tmp/graft-test-metastore;create=true")

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes + Spark jars — no sbt
-# lock, same JVM flags as build.sbt (add-opens, heap, GC hook).
+# lock, same JVM flags as build.sbt (add-opens, heap, GC hook). Spark
+# confs come from the session (GraftContext.sessionBuilder), not -D flags.
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -12,6 +13,5 @@ done
 GCOPT=""
 [ -n "$SPARK_GRAFT_GC" ] && GCOPT="-XX:+$SPARK_GRAFT_GC"
 exec java $ADDOPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} $GCOPT \
   -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*" "$@"
