@@ -1,7 +1,90 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+
+/** Execution counters credited to one bench sample. */
+private[graft] final case class SampleStats(jobs: Long = 0, stages: Long = 0,
+    tasks: Long = 0, shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,
+    memorySpillBytes: Long = 0, diskSpillBytes: Long = 0,
+    executorRunMs: Long = 0, gcMs: Long = 0)
+
+/** The bench's one listener: credits jobs, stages and task metrics to the
+  * sample whose tag ([[SampleRecorder.Key]], a local property) the job
+  * was submitted under. A job start carries its thread's properties and
+  * its stage ids, so each stage maps to its sample's tag and every task
+  * end is credited there — however late the async bus delivers it, and
+  * never to a job of another thread or an untagged one.
+  */
+private[graft] final class SampleRecorder extends SparkListener {
+  private val stageTag = mutable.Map[Int, String]()
+  private val byTag = mutable.Map[String, SampleStats]()
+
+  private def credit(tag: String)(f: SampleStats => SampleStats): Unit =
+    byTag(tag) = f(byTag.getOrElse(tag, SampleStats()))
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty(SampleRecorder.Key)))
+      .foreach { tag =>
+        e.stageInfos.foreach(s => stageTag(s.stageId) = tag)
+        credit(tag)(s => s.copy(jobs = s.jobs + 1))
+      }
+  }
+
+  // skipped stages (map outputs already computed) never complete, so
+  // only the stages a sample actually ran are counted
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized {
+      stageTag.get(e.stageInfo.stageId)
+        .foreach(credit(_)(s => s.copy(stages = s.stages + 1)))
+    }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    stageTag.get(e.stageId).foreach(credit(_) { s =>
+      val m = e.taskMetrics
+      if (m == null) s.copy(tasks = s.tasks + 1)
+      else s.copy(tasks = s.tasks + 1,
+        shuffleReadBytes = s.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = s.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+        memorySpillBytes = s.memorySpillBytes + m.memoryBytesSpilled,
+        diskSpillBytes = s.diskSpillBytes + m.diskBytesSpilled,
+        executorRunMs = s.executorRunMs + m.executorRunTime,
+        gcMs = s.gcMs + m.jvmGCTime)
+    })
+  }
+
+  /** Tags with credited work that [[take]] has not yet collected. */
+  def tags: Set[String] = synchronized(byTag.keySet.toSet)
+
+  /** Everything credited to `tag`, which is then forgotten. Events ride
+    * the async listener bus: drain it first
+    * (`Shims.drainListenerBus`) or late task ends are missed.
+    */
+  def take(tag: String): SampleStats = synchronized {
+    stageTag.filterInPlace((_, t) => t != tag)
+    byTag.remove(tag).getOrElse(SampleStats())
+  }
+}
+
+private[graft] object SampleRecorder {
+  val Key = "graft.bench.sample"
+
+  /** Runs `body` with `tag` as this thread's [[Key]] local property. */
+  def tagged[T](sc: SparkContext, tag: String)(body: => T): T = {
+    sc.setLocalProperty(Key, tag)
+    try body finally sc.setLocalProperty(Key, null)
+  }
+}
+
 /** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock.
+  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock,
+  * and per query a `layers` record of its last scored sample: construct
+  * / plan / exec seconds and the jobs, stages, tasks, shuffle bytes,
+  * executor run time and GC time the [[SampleRecorder]] credited to it.
+  * `SPARK_GRAFT_ONLY=<q>[,<q>...]` profiles a subset the same way.
   *
   * local[32] with shuffle.partitions=32 (one task wave per shuffle) and
   * AQE on — the same settings a real cluster deployment would scale out.
@@ -146,7 +229,39 @@ object Bench {
       gitSha: String, stamp: String, fullJsonPath: String): String =
     s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,"n_ok":$nOk,"n_errors":${nQueries - nOk},"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"shuffle_partitions":${jsonStr(shuffleParts)},"samples_policy":${jsonStr(policy)},"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)},"full_json":${jsonStr(fullJsonPath)}}"""
 
+  /** The queries a run covers, sorted by name: every registered one, or
+    * the comma-separated `only` subset. Left lists the names in `only`
+    * that are not registered, so a typo fails the run before any query
+    * runs instead of quietly shrinking the subset. Package-private for
+    * the spec.
+    */
+  private[graft] def selectQueries[F](only: Option[String],
+      registered: Map[String, F]): Either[String, Seq[(String, F)]] =
+    only.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => Right(registered.toSeq.sortBy(_._1))
+      case Some(names) =>
+        val unknown = names.filterNot(registered.contains).toSeq.sorted
+        if (names.isEmpty) Left("SPARK_GRAFT_ONLY names no query")
+        else if (unknown.nonEmpty)
+          Left("SPARK_GRAFT_ONLY names unregistered queries: " +
+            unknown.mkString(", "))
+        else Right(registered.toSeq.filter(q => names(q._1)).sortBy(_._1))
+    }
+
+  /** A sample's `layers` record: its construct / plan / exec split and
+    * the execution counters credited to it. */
+  private[graft] def layersJson(constructS: Double, planS: Double,
+      execS: Double, s: SampleStats): String =
+    s"""{"construct_s":$constructS,"plan_s":$planS,"exec_s":$execS,"jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},"shuffle_read_bytes":${s.shuffleReadBytes},"shuffle_write_bytes":${s.shuffleWriteBytes},"executor_run_s":${s.executorRunMs / 1e3},"gc_s":${s.gcMs / 1e3}}"""
+
   def main(args: Array[String]): Unit = {
+    // local profiling hook: run a subset (comma-separated names). The
+    // contract run leaves it unset and runs every query.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = selectQueries(only, SparkEntry.queries) match {
+      case Right(qs) => qs
+      case Left(err) => System.err.println(s"bench: $err"); sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contention guard (r12 "what's wrong" #1): detect OTHER Spark/graft
     // JVMs before this leg starts — scanned here, before our own
@@ -258,9 +373,8 @@ object Bench {
     // run at all (exit 3) so a detached long leg can't burn an hour
     // producing junk. Bands observed over rounds 10-12: sf0.1 clean
     // canary 0.13-0.22 s (contaminated r12 leg: 0.66); sf100 clean
-    // 2.15-2.26 s. Threshold = 1.6× the band ceiling, overridable.
-    val canaryMax = sys.env.get("SPARK_GRAFT_CANARY_MAX").map(_.toDouble)
-      .getOrElse(if (fixtureBytes < (4L << 30)) 0.35 else 3.6)
+    // 2.15-2.26 s. Threshold = 1.6× the band ceiling.
+    val canaryMax = if (fixtureBytes < (4L << 30)) 0.35 else 3.6
     val contendedAtStart = canaryStart > canaryMax || foreignJvmsAtStart.nonEmpty
     val contentionJson =
       s""""contended":$contendedAtStart,"contention":{"canary_max_sec":$canaryMax,"foreign_jvms":[${foreignJvmsAtStart.mkString(",")}]}"""
@@ -270,9 +384,6 @@ object Bench {
       sys.exit(3)
     }
 
-    // local profiling hook: run a subset (comma-separated names). The
-    // driver never sets this — the contract stays "run every query".
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     // Cold-vs-warm discipline (r9 verdict): at ≥~1 GB of fixture data a
     // query's FIRST sample measures page-cache fill and GC ramp as much
     // as the plan — judge-observed sf100 spread was 29.6-186.8 s on one
@@ -281,31 +392,12 @@ object Bench {
     // the cold number) but excluded from the scored value; the policy
     // rides in the JSON as `samples_policy` so cross-leg comparisons can
     // see which convention produced each record.
-    // SPARK_GRAFT_SAMPLES_POLICY=all|discard_first overrides.
-    val discardFirst = sys.env.get("SPARK_GRAFT_SAMPLES_POLICY") match {
-      case Some("all") => false
-      case Some("discard_first") => true
-      case _ => fixtureBytes >= (1L << 30)
-    }
-    // Spill accounting for constrained-heap legs: task-level
-    // memory/diskBytesSpilled summed across the session; each query
-    // records the delta over its samples. Listener delivery is async, so
-    // attribution can lag a task-end into the next query's window —
-    // fine for the MB-scale signal this records (did the operator spill,
-    // roughly how much), not a precise accounting.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            spillMem.addAndGet(m.memoryBytesSpilled)
-            spillDisk.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
+    val discardFirst = fixtureBytes >= (1L << 30)
+    // Per-sample execution counters (jobs, stages, tasks, shuffle bytes,
+    // spill, executor run and GC time), credited by sample tag — spill_mb
+    // per query is its samples' memory/disk spill.
+    val recorder = new SampleRecorder
+    spark.sparkContext.addSparkListener(recorder)
     // Shuffle-file DRAIN between samples (r12 verdict: graph_pagerank
     // rose monotonically 11.9→37.9 s across samples under local-cluster,
     // unexplained). Root cause: in multi-JVM mode executors are separate
@@ -321,19 +413,16 @@ object Bench {
     // JVMs on one box) until deletion stops making progress — OUTSIDE
     // the timed window, the way an idle real cluster drains between
     // jobs. Per-sample [pre, post] MB are stamped as blockmgr_mb so the
-    // accumulation is measured, not inferred. SPARK_GRAFT_SHUFFLE_DRAIN=0
-    // reverts to the bare GC.
+    // accumulation is measured, not inferred.
     val localDirRoots: Seq[java.nio.file.Path] =
       spark.sparkContext.getConf.get("spark.local.dir",
           System.getProperty("java.io.tmpdir", "/tmp"))
         .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
         .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.isDirectory(_))
     def blockmgrBytes(): Long = Bench.blockmgrBytesUnder(localDirRoots)
-    val drainEnabled = !sys.env.get("SPARK_GRAFT_SHUFFLE_DRAIN").contains("0")
     def drainShuffle(): (Long, Long) = {
       val pre = blockmgrBytes()
       System.gc()
-      if (!drainEnabled) return (pre, pre)
       // exit once three consecutive polls make no progress (cleanup RPCs
       // have drained or nothing was pending) or after 20 s — a bounded,
       // untimed pause, ~1.2 s when the dirs are already clean
@@ -355,9 +444,11 @@ object Bench {
     // everything; when both samples exceed 1 s (the family where one
     // stall can still dominate the min), take a third and record the
     // median. All samples are emitted so regressions stay auditable.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    case class QueryResult(name: String, value: Double, samples: List[Double],
+        skewJoins: Int, spillMem: Long, spillDisk: Long,
+        sampleTs: List[Double], bmDrain: List[(Long, Long)], layers: String)
+    var sampleSeq = 0
+    val results = selected.map { case (name, fn) =>
       // one timed execution through the query's OWN plan (toRdd): a
       // plain count() lets the optimizer prune every unreferenced
       // column — a projection/window query would bench its scan, not
@@ -368,7 +459,11 @@ object Bench {
       // a partition. Recorded per query so scale probes (200-partition
       // runs) can report WHERE skew handling actually fired.
       var skewJoins = 0
-      val spillMem0 = spillMem.get(); val spillDisk0 = spillDisk.get()
+      // memory/disk spill bytes over all of the query's samples
+      var spillMem = 0L; var spillDisk = 0L
+      // layers of the latest successful sample — the last scored one
+      // whenever the query succeeds (scored samples are the tail)
+      var layers = ""
       // wall-clock start of each successful sample (epoch seconds),
       // aligned 1:1 with the samples list — lets a reader distinguish a
       // cold first sample from a steady-state one across legs
@@ -377,18 +472,38 @@ object Bench {
       // the accumulation evidence for the multi-JVM pathology above
       val bmDrain = scala.collection.mutable.ListBuffer[(Long, Long)]()
       def sample(): Option[Double] = {
+        sampleSeq += 1
+        val tag = s"$name#$sampleSeq"
         val wall0 = System.currentTimeMillis() / 1000.0
+        // construct = the query function, plan = analyze + optimize +
+        // physical planning (forced here; toRdd would force it anyway),
+        // exec = AQE round-trips, scheduling and compute
         val t0 = System.nanoTime()
-        val ok = try {
-          val df = fn(spark, sfDir)
-          df.queryExecution.toRdd.count()
-          skewJoins = math.max(skewJoins,
-            "skew=true".r.findAllIn(
-              df.queryExecution.executedPlan.toString).size)
-          true
-        } catch { case t: Throwable =>
-            System.err.println(s"bench: $name FAILED: ${t.getMessage}"); false }
+        var t1 = t0; var t2 = t0; var t3 = t0
+        val ok = SampleRecorder.tagged(spark.sparkContext, tag) {
+          try {
+            val df = fn(spark, sfDir)
+            t1 = System.nanoTime()
+            df.queryExecution.executedPlan
+            t2 = System.nanoTime()
+            df.queryExecution.toRdd.count()
+            t3 = System.nanoTime()
+            skewJoins = math.max(skewJoins,
+              "skew=true".r.findAllIn(
+                df.queryExecution.executedPlan.toString).size)
+            true
+          } catch { case t: Throwable =>
+              System.err.println(s"bench: $name FAILED: ${t.getMessage}"); false }
+        }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        // outside the timed window: deliver the sample's pending listener
+        // events, then collect what they credited to its tag
+        org.apache.spark.sql.graft.Shims.drainListenerBus(
+          spark.sparkContext, 10000L)
+        val stats = recorder.take(tag)
+        spillMem += stats.memorySpillBytes; spillDisk += stats.diskSpillBytes
+        if (ok) layers = layersJson((t1 - t0) / 1e9, (t2 - t1) / 1e9,
+          (t3 - t2) / 1e9, stats)
         graft.operators.Dedup.releaseCaches()
         // Shuffle-file hygiene at data scale (≥1 GiB fixtures, same
         // threshold as discard_first): a completed job's shuffle files
@@ -429,38 +544,32 @@ object Bench {
         case two if two.size == 2 => two.min
         case three => three.sorted.apply(1) // median-of-3
       }
-      (name, value, samples, skewJoins,
-        (spillMem.get() - spillMem0, spillDisk.get() - spillDisk0),
-        sampleTs.toList, bmDrain.toList)
+      QueryResult(name, value, samples, skewJoins, spillMem, spillDisk,
+        sampleTs.toList, bmDrain.toList,
+        if (scored.isEmpty) "" else layers)
     }
-    val qs = results.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sampleJson = results.map { case (k, _, ss, _, _, _, _) =>
-      "\"" + k + "\":" + ss.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    def perQuery(rs: Seq[QueryResult])(v: QueryResult => String): String =
+      rs.map(r => jsonStr(r.name) + ":" + v(r)).mkString("{", ",", "}")
+    val qs = perQuery(results)(_.value.toString)
+    val sampleJson = perQuery(results)(_.samples.mkString("[", ",", "]"))
     // epoch-second start of each sample, 1:1 with `samples` — under
     // discard_first the head entry is the cold sample by construction
-    val sampleTsJson = results.map { case (k, _, _, _, _, ts, _) =>
-      "\"" + k + "\":" + ts.map(t => f"$t%.1f").mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val errs = results.filter(_._3.isEmpty).map("\"" + _._1 + "\"")
+    val sampleTsJson = perQuery(results)(
+      _.sampleTs.map(t => f"$t%.1f").mkString("[", ",", "]"))
+    val errs = results.filter(_.samples.isEmpty).map(r => jsonStr(r.name))
       .mkString("[", ",", "]")
-    val skewJson = results.filter(_._4 > 0).map { case (k, _, _, s, _, _, _) =>
-      "\"" + k + "\":" + s }.mkString("{", ",", "}")
-    // per-query spill deltas in MB, only where nonzero (memory, disk)
-    val spillJson = results.filter(t => t._5._1 > 0 || t._5._2 > 0)
-      .map { case (k, _, _, _, (sm, sd), _, _) =>
-        "\"" + k + "\":[" + (sm >> 20) + "," + (sd >> 20) + "]" }
-      .mkString("{", ",", "}")
+    val skewJson = perQuery(results.filter(_.skewJoins > 0))(_.skewJoins.toString)
+    // per-query spill in MB, only where nonzero (memory, disk)
+    val spillJson = perQuery(results.filter(r => r.spillMem > 0 || r.spillDisk > 0))(
+      r => "[" + (r.spillMem >> 20) + "," + (r.spillDisk >> 20) + "]")
     // per-query, per-sample [pre, post] blockmgr MB around each drain —
     // only stamped where something was on disk (pre or post > 1 MB)
-    val bmJson = results
-      .filter(_._7.exists(d => (d._1 >> 20) > 1 || (d._2 >> 20) > 1))
-      .map { case (k, _, _, _, _, _, bm) =>
-        "\"" + k + "\":" + bm.map { case (pre, post) =>
-          "[" + (pre >> 20) + "," + (post >> 20) + "]" }
-          .mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = results.filter(_._3.nonEmpty).map(_._2).sum
+    val bmJson = perQuery(results
+      .filter(_.bmDrain.exists(d => (d._1 >> 20) > 1 || (d._2 >> 20) > 1)))(
+      _.bmDrain.map { case (pre, post) =>
+        "[" + (pre >> 20) + "," + (post >> 20) + "]" }.mkString("[", ",", "]"))
+    val layersAll = perQuery(results.filter(_.layers.nonEmpty))(_.layers)
+    val total = results.filter(_.samples.nonEmpty).map(_.value).sum
     val canaryEnd = canarySec()
 
     // Concurrency axis (the reference runs suites with queries in flight
@@ -556,7 +665,7 @@ object Bench {
         (Runtime.getRuntime.maxMemory >> 30) + "g(driver-heap)")
     val stamp = java.time.Instant.now().toString
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"layers":$layersAll,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
     println(json)
     // the stdout line overflows log-tail captures (the driver's BENCH_r*
     // 'parsed' field has been null every round) — also write the JSON to a
@@ -595,7 +704,7 @@ object Bench {
     // and in the JSON file. Deliberately NO "queries" key here — an
     // empty map could misread as every query dropped from the bench;
     // absence degrades to the status quo at worst.
-    val nOk = results.count(_._3.nonEmpty)
+    val nOk = results.count(_.samples.nonEmpty)
     println(compactLine(total, results.size, nOk, sfDir, master,
       shuffleParts,
       if (discardFirst) "discard_first" else "all",

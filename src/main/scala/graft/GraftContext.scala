@@ -1045,9 +1045,10 @@ object GraftContext {
       // partitions and no map-side aggregation Spark's sort-shuffle
       // takes the bypass-merge path — numPartitions OPEN FILES PER MAP
       // TASK, concatenated at the end. At 32-121 partitions that cost
-      // ~8.5 ms/task in small file creates on a 32-core box (MicroFloor
-      // attribution; join_full 0.56→0.35 s, graph_pagerank's worst leg
-      // 19.4→2.8 s once forced off). Threshold 0 forces the serialized
+      // ~8.5 ms/task in small file creates on a 32-core box
+      // (OPTIMIZATION_r14.md, "Where exec goes"; join_full 0.56→0.35 s,
+      // graph_pagerank's worst leg 19.4→2.8 s once forced off).
+      // Threshold 0 forces the serialized
       // UnsafeShuffleWriter — one data+index file per map task — which
       // is EXACTLY the writer any >200-partition production shuffle
       // already uses. A core conf: it must be set before the context

@@ -166,7 +166,8 @@ object Dedup {
       // larger dup set only raises the FP rate, which costs extra
       // singleton rows in the window below, never correctness.
       //
-      // Shape of the dup-key count (r12, CcProfile): band keys are
+      // Shape of the dup-key count (r12, BASELINE.md dedup_clusters
+      // decomposition): band keys are
       // near-UNIQUE (160 M banded rows → ~0.2% dup keys at sf100), so a
       // plain groupBy's map-side partial aggregate builds a multi-million-
       // entry hashmap per task that reduces almost nothing — measured as
@@ -291,8 +292,9 @@ object Dedup {
     * shared by the batch candidate join and the streaming bucket keyer so
     * the banding scheme cannot drift between the two.
     *
-    * Measured NON-obvious plan fact (r11, graft.tools.BandProbe at
-    * sf100, full-evaluation aggregate so the generator can't be pruned):
+    * Measured NON-obvious plan fact (r11, sf100, a full-evaluation
+    * aggregate so the generator can't be pruned; this comment is the
+    * record of that measurement):
     * this interpreted transform(sequence(...)) HOF runs the 160 M-row
     * banded pass in 23.7 s; the "codegen-friendly" statically-unrolled
     * explode(array(struct(lit(b), hash(slice(...))) ×32)) form takes
@@ -698,7 +700,7 @@ object Dedup {
     // (not merely collision-unlikely), and the banding pass drops from
     // 53 s to shift-arithmetic per row at sf100 (the string
     // substring+concat+xxhash formulation was the stage's entire cost;
-    // profile: tools/ShbProfile). Equal string keys ⟺ equal packed
+    // OPTIMIZATION_r13.md, 32a828f). Equal string keys ⟺ equal packed
     // longs, so the candidate SET is exactly the oracle's. Hamming is
     // verified map-side on the join output BEFORE the distinct (the r10
     // reshape), so the dedupe exchange carries only true pairs at
@@ -740,14 +742,14 @@ object Dedup {
     // is persisted, counted, then scanned once more for the build):
     // r13's first cut hardcoded 1.6 M expected / 2^24 bits while sf100
     // has 8.2 M dup keys — 2 bits/key saturated the filter to an 81%
-    // pass rate, all prune cost and no prune (ShbProfile decomposition).
+    // pass rate, all prune cost and no prune (OPTIMIZATION_r13.md, 9da6f45).
     // 16 bits/key ⇒ FPR ~5·10⁻⁴. Banding is re-derived per pass, but
     // from the PERSISTED signatures — pure shift arithmetic, no md5.
     val banded = if (!scaleLsh(docs)) banded0 else {
       // One banding pass, not two: the explode is the pipeline's single
-      // largest stage (ShbProfile: 43 s of the 150 s at sf100 even with
-      // packed keys — row GENERATION, not key arithmetic), and both the
-      // dup-key count and the join sides consume it. Persist the banded
+      // largest stage (~43 s at sf100 even with packed keys,
+      // OPTIMIZATION_r14.md — row GENERATION, not key arithmetic), and
+      // both the dup-key count and the join sides consume it. Persist the banded
       // table (compressed columnar longs; the dup-key count below
       // materializes it) so the prune pass is a cache scan. The Bloom
       // build coalesces the persisted dup keys to a few partitions —

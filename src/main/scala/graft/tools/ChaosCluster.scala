@@ -93,15 +93,9 @@ object ChaosCluster {
         Option(killer).foreach(_.join(30000))
         // stagesSeen is fed by the ASYNC listener bus: a fast query can
         // finish before its TaskStart events deliver, making noWindow
-        // spuriously true and masking a missed kill. listenerBus is
-        // private[spark], so drain it via reflection (fallback: settle).
-        try {
-          val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-            .invoke(spark.sparkContext)
-          bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-            .foreach(_.invoke(bus, java.lang.Long.valueOf(10000L)))
-        } catch { case _: ReflectiveOperationException => Thread.sleep(2000) }
+        // spuriously true and masking a missed kill — drain it first.
+        org.apache.spark.sql.graft.Shims.drainListenerBus(
+          spark.sparkContext, 10000L)
         // a single-stage query has no post-shuffle window to kill in:
         // report that distinctly (not a probe failure — nothing to test)
         val noWindow = stagesSeen.size <= 1

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -7,8 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to `private[sql]` Column↔Expression and plan↔Dataset conversions
   * (Spark 4.x moved Column onto ColumnNode; classic sessions convert via
-  * ExpressionUtils). This is the only place the library reaches into Spark
-  * internals.
+  * ExpressionUtils) and to the `private[spark]` listener bus. This is the
+  * only place the library reaches into Spark internals.
   */
 object Shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -18,4 +19,10 @@ object Shims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every listener event posted so far has been delivered
+    * (the bus is asynchronous); false if `timeoutMs` ran out first. */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

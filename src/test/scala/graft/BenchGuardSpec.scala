@@ -144,6 +144,43 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.jsonStr("-- c\nSELECT 1") == """"-- c\nSELECT 1"""")
   }
 
+  test("selectQueries fails fast on names that are not registered") {
+    val reg = Map("q3_topk" -> 3, "q1_agg" -> 1, "join_full" -> 5)
+    assert(Bench.selectQueries(None, reg) ==
+      Right(Seq("join_full" -> 5, "q1_agg" -> 1, "q3_topk" -> 3)))
+    assert(Bench.selectQueries(Some("q3_topk, q1_agg"), reg) ==
+      Right(Seq("q1_agg" -> 1, "q3_topk" -> 3)))
+    // a typo must not silently shrink the subset: every unknown name is
+    // listed and nothing runs
+    val typo = Bench.selectQueries(Some("q1_agg,q3_topk,q3_topkk,q99"), reg)
+    assert(typo.isLeft)
+    val msg = typo.swap.getOrElse("")
+    assert(msg.contains("q3_topkk") && msg.contains("q99"))
+    assert(!msg.contains("q1_agg"))
+    assert(Bench.selectQueries(Some(" , "), reg).isLeft)
+    // the registry itself: q1_pricing was never a registered name
+    assert(Bench.selectQueries(Some("q1_pricing,q3_topk"),
+      SparkEntry.queries).isLeft)
+  }
+
+  test("layersJson is one JSON object with the ten layer fields") {
+    val line = Bench.layersJson(0.25, 0.5, 1.5, SampleStats(jobs = 3,
+      stages = 4, tasks = 12, shuffleReadBytes = 100, shuffleWriteBytes = 200,
+      memorySpillBytes = 7, diskSpillBytes = 8, executorRunMs = 1500,
+      gcMs = 20))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    import scala.jdk.CollectionConverters._
+    assert(parsed.fieldNames.asScala.toSeq == Seq("construct_s", "plan_s",
+      "exec_s", "jobs", "stages", "tasks", "shuffle_read_bytes",
+      "shuffle_write_bytes", "executor_run_s", "gc_s"))
+    assert(parsed.get("exec_s").asDouble() == 1.5)
+    assert(parsed.get("tasks").asLong() == 12L)
+    assert(parsed.get("shuffle_write_bytes").asLong() == 200L)
+    assert(parsed.get("executor_run_s").asDouble() == 1.5)
+    assert(parsed.get("gc_s").asDouble() == 0.02)
+  }
+
   test("foreignSparkJvms tolerates a truncated process table (no cycles)") {
     // a pid whose ppid is missing from the scan (raced exit) must not
     // loop or throw; parent defaults to init

@@ -18,14 +18,16 @@ class DedupGuardSpec extends SparkSuite {
 
   private val HOT = 10000 // pathological bucket occupancy
 
-  /** banded fixture: one hot bucket of HOT ids + one cold bucket of 5
+  private def banded = bucketed(HOT)
+
+  /** banded fixture: one hot bucket of `hot` ids + one cold bucket of 5
     * disjoint ids (and a singleton, which must emit nothing).
     */
-  private def banded = {
-    val hot = (1L to HOT.toLong).map(id => (0, 1L, id))
+  private def bucketed(hot: Int) = {
+    val hotIds = (1L to hot.toLong).map(id => (0, 1L, id))
     val cold = (20001L to 20005L).map(id => (0, 2L, id))
     val single = Seq((1, 3L, 30001L))
-    (hot ++ cold ++ single).toDF("band", "bh", "id")
+    (hotIds ++ cold ++ single).toDF("band", "bh", "id")
   }
 
   test("hot bucket degrades to star pairs; cold buckets stay pairwise") {
@@ -110,12 +112,17 @@ class DedupGuardSpec extends SparkSuite {
   }
 
   test("guard is the identity when no bucket exceeds the cap") {
+    // a hot bucket whose occupancy EQUALS the cap — the occ <= cap
+    // boundary — kept to a few hundred ids so the naive self-join below
+    // is ~4.5·10⁴ pairs, not the ~5·10⁷ of the HOT fixture
+    val occ = 300
+    val banded = bucketed(occ)
     val naive = banded.select($"band", $"bh", $"id".as("id_a"))
       .join(banded.select($"band", $"bh", $"id".as("id_b")), Seq("band", "bh"))
       .filter($"id_a" < $"id_b")
       .select($"id_a", $"id_b").distinct()
     val guarded =
-      Dedup.guardedBandPairs(banded, Seq("band", "bh"), cap = HOT + 1)
+      Dedup.guardedBandPairs(banded, Seq("band", "bh"), cap = occ)
     assert(guarded.count() === naive.count())
     assert(guarded.except(naive).count() === 0L)
     assert(naive.except(guarded).count() === 0L)
