@@ -254,6 +254,18 @@ object Bench {
       execS: Double, s: SampleStats): String =
     s"""{"construct_s":$constructS,"plan_s":$planS,"exec_s":$execS,"jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},"shuffle_read_bytes":${s.shuffleReadBytes},"shuffle_write_bytes":${s.shuffleWriteBytes},"executor_run_s":${s.executorRunMs / 1e3},"gc_s":${s.gcMs / 1e3}}"""
 
+  /** Clean-band ceiling of the start canary, in seconds. Bands observed
+    * on 32-core legs over rounds 10-12: sf0.1 clean 0.13-0.22 s
+    * (contaminated r12 leg: 0.66), sf100 clean 2.15-2.26 s; the ceiling
+    * there is 1.6× the band top. The canary is one scan-agg wave, so with
+    * fewer cores each task does more of it: below 32 cores the ceiling
+    * grows with the cube root of 32/cores, doubling at 4 cores (clean
+    * sf0.1 legs on a 4-vCPU VM read 0.296-0.375 s). */
+  private[graft] def canaryMax(fixtureBytes: Long, cores: Int): Double = {
+    val at32 = if (fixtureBytes < (4L << 30)) 0.35 else 3.6
+    at32 * math.cbrt(32.0 / math.min(32, math.max(1, cores)))
+  }
+
   def main(args: Array[String]): Unit = {
     // local profiling hook: run a subset (comma-separated names). The
     // contract run leaves it unset and runs every query.
@@ -371,10 +383,9 @@ object Bench {
     // "contended":true (machine-readable — a reader comparing legs must
     // discard it) and, under SPARK_GRAFT_REFUSE_CONTENDED=1, refuses to
     // run at all (exit 3) so a detached long leg can't burn an hour
-    // producing junk. Bands observed over rounds 10-12: sf0.1 clean
-    // canary 0.13-0.22 s (contaminated r12 leg: 0.66); sf100 clean
-    // 2.15-2.26 s. Threshold = 1.6× the band ceiling.
-    val canaryMax = if (fixtureBytes < (4L << 30)) 0.35 else 3.6
+    // producing junk. The ceiling follows the fixture and the cores
+    // (see [[canaryMax]]).
+    val canaryMax = Bench.canaryMax(fixtureBytes, spark.sparkContext.defaultParallelism)
     val contendedAtStart = canaryStart > canaryMax || foreignJvmsAtStart.nonEmpty
     val contentionJson =
       s""""contended":$contendedAtStart,"contention":{"canary_max_sec":$canaryMax,"foreign_jvms":[${foreignJvmsAtStart.mkString(",")}]}"""

@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.{CancellationException, CompletableFuture,
+  ExecutionException, TimeUnit, TimeoutException}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, lit, max, regexp_replace, when}
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayDeque
@@ -306,11 +310,9 @@ class GraftContext(val spark: SparkSession) {
 
   private def register(name: String, df: DataFrame, path: Option[String],
       fmt: String): DataFrame = {
+    // a temp view of the context's session; the per-query clones of
+    // sql(query, configOptions) start with a copy of every temp view
     df.createOrReplaceTempView(name)
-    // global temp view too: sibling sessions spawned by the per-query
-    // config_options path (sql(query, options)) resolve the same tables
-    // through global_temp without re-reading or re-planning anything
-    df.createOrReplaceGlobalTempView(name)
     catalog.put(name, TableEntry(name, df, path, fmt))
     df
   }
@@ -380,7 +382,6 @@ class GraftContext(val spark: SparkSession) {
 
   def dropTable(name: String): Unit = {
     catalog.remove(name)
-    spark.catalog.dropGlobalTempView(name)
     // The instance map can be stale (a second context on the same session
     // never saw the createBucketedTable) — consult the SESSION's state:
     // drop the temp view if one exists, else fall through to the catalog
@@ -448,30 +449,21 @@ class GraftContext(val spark: SparkSession) {
     * `sql(query, config_options={...})` (context.py:3071-3121), where the
     * options govern that one query and never touch the context's settings.
     *
-    * Spark-native isolation instead of set-then-restore: the query plans
-    * against a SIBLING session (`SparkSession.newSession` — shared
-    * SparkContext, shared external catalog and cached data, independent
-    * SQLConf). The returned DataFrame stays lazy and still executes under
-    * the overrides whenever the caller finally acts on it, and concurrent
-    * queries on the main session never observe the temporary values (a
-    * save/restore on the shared conf would race them). Registered tables
-    * resolve through the global temp views created at create_table time —
-    * same logical plans, no re-read.
+    * Isolation instead of set-then-restore: the query plans in a CLONE of
+    * the context's session ([[org.apache.spark.sql.graft.Shims.cloneSession]])
+    * that carries the overrides in its own SQLConf. The clone starts with
+    * every temp view, so it sees each registered table and
+    * `createTableFromCatalog` alias with the same logical plans (no
+    * re-read), the session's functions, and its query-execution
+    * listeners, so the query reaches [[log]]. The returned DataFrame stays
+    * lazy and still executes under the overrides whenever the caller acts
+    * on it; concurrent queries on the context's session never observe
+    * them (a save/restore on the shared conf would race them).
     */
   def sql(query: String, configOptions: Map[String, String]): DataFrame = {
     if (configOptions.isEmpty) return sql(query)
-    val resolved = resolveOptions(configOptions) // validate BEFORE spawning
-    val sub = spark.newSession()
-    graft.functions.registerSql(sub)
-    resolved.foreach { case (_, k, v) => sub.conf.set(k, v) }
-    // alias each registered table into the sibling session; a temp view
-    // over global_temp is pure analysis-time aliasing (pushdown intact)
-    catalog.keys.foreach { name =>
-      if (spark.catalog.tableExists("global_temp", name))
-        sub.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$name` AS " +
-          s"SELECT * FROM global_temp.`$name`")
-    }
-    sub.sql(query)
+    val resolved = resolveOptions(configOptions) // validate BEFORE cloning
+    Shims.cloneSession(spark, resolved.map { case (_, k, v) => k -> v }).sql(query)
   }
 
   /** Async submission: the reference's sql(..., return_token=True) +
@@ -482,65 +474,70 @@ class GraftContext(val spark: SparkSession) {
   // ---- token polling surface (context.py:3071-3344) ----------------------
   // The reference's sql(..., return_token=True) returns a token the client
   // polls with status(token) and redeems with fetch(token); here each token
-  // owns a Spark JOB GROUP so cancel(token) maps onto
-  // SparkContext.cancelJobGroup — killing the running stages, not just
-  // abandoning a Future.
+  // is a future on a shared pool that owns a Spark JOB GROUP, so
+  // cancel(token) maps onto SparkContext.cancelJobGroup — killing the
+  // running stages, not just abandoning the future.
 
-  private val tokens = TrieMap.empty[Long, TokenState]
+  private val tokens = TrieMap.empty[Long, (String, CompletableFuture[Result])]
 
   /** Submit `query` for background execution; returns a token for
     * [[tokenStatus]]/[[fetch]]/[[cancel]]. The result is materialized to
     * the driver on completion (the reference's fetch returns a client-side
     * DataFrame — same contract; keep LIMIT in the query for big results).
+    * The query's jobs carry the submitting thread's local properties (job
+    * tags, scheduler pool) plus the token's own job group.
     */
   def sqlToken(query: String): Long = {
     val id = tokenIds.getAndIncrement()
-    val st = new TokenState(s"graft-token-$id")
-    tokens.put(id, st)
-    val worker = new Thread(() => {
+    val group = s"graft-token-$id"
+    val sc = spark.sparkContext
+    val future = Shims.submitCaptured(spark) {
       // job group is thread-local: set it in the thread that runs the jobs
-      spark.sparkContext.setJobGroup(st.group, s"graft sqlToken $id",
-        interruptOnCancel = true)
+      sc.setJobGroup(group, s"graft sqlToken $id", interruptOnCancel = true)
       try {
         val df = spark.sql(query)
-        st.finish(df.schema, df.collect())
-      } catch {
-        case e: Throwable => st.fail(e)
-      } finally spark.sparkContext.clearJobGroup()
-    }, s"graft-token-$id")
-    worker.setDaemon(true)
-    worker.start()
+        (df.schema, df.collect())
+      } finally sc.clearJobGroup()
+    }
+    tokens.put(id, (group, future))
     id
   }
 
-  /** RUNNING | DONE | FAILED | CANCELLED (context.py:3192 status_). */
-  def tokenStatus(token: Long): String = tokenState(token).status
+  /** RUNNING | DONE | FAILED | CANCELLED (context.py:3192 status_). A
+    * cancel that races a completed collect keeps CANCELLED: like the
+    * reference's status_, it reports what the client requested. */
+  def tokenStatus(token: Long): String = {
+    val f = tokenFuture(token)._2
+    if (f.isCancelled) "CANCELLED"
+    else if (!f.isDone) "RUNNING"
+    else if (f.isCompletedExceptionally) "FAILED"
+    else "DONE"
+  }
 
   /** Block (up to `timeoutMs`) for the token's result and return it as a
     * DataFrame. Throws the query's own failure for FAILED tokens and
     * IllegalStateException for CANCELLED ones. */
   def fetch(token: Long, timeoutMs: Long = 300000L): DataFrame = {
-    val st = tokenState(token)
-    if (!st.done.await(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-      throw new java.util.concurrent.TimeoutException(
-        s"token $token still ${st.status} after ${timeoutMs}ms")
-    st.status match {
-      case "DONE" =>
-        val (schema, rows) = st.result.get
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      case "CANCELLED" => throw new IllegalStateException(s"token $token was cancelled")
-      case _ => throw st.error.getOrElse(new IllegalStateException(s"token $token failed"))
-    }
+    val (schema, rows) =
+      try tokenFuture(token)._2.get(timeoutMs, TimeUnit.MILLISECONDS)
+      catch {
+        case _: TimeoutException => throw new TimeoutException(
+          s"token $token still ${tokenStatus(token)} after ${timeoutMs}ms")
+        case _: CancellationException =>
+          throw new IllegalStateException(s"token $token was cancelled")
+        case e: ExecutionException => throw e.getCause
+      }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Cancel a running token's Spark jobs (job-group cancel; stages die,
     * not just the polling handle). No-op for finished tokens. */
   def cancel(token: Long): Unit = {
-    val st = tokenState(token)
-    if (st.markCancelled()) spark.sparkContext.cancelJobGroup(st.group)
+    val (group, f) = tokenFuture(token)
+    if (f.cancel(true)) spark.sparkContext.cancelJobGroup(group)
   }
 
-  private def tokenState(token: Long): TokenState =
+  private def tokenFuture(token: Long): (String, CompletableFuture[Result]) =
     tokens.getOrElse(token,
       throw new NoSuchElementException(s"unknown query token: $token"))
 
@@ -784,32 +781,8 @@ object GraftContext {
       c.set(s"fs.$scheme.impl", lite)
   }
 
-  /** Lifecycle of one [[GraftContext.sqlToken]] submission. Transitions
-    * RUNNING → {DONE, FAILED, CANCELLED} exactly once; a cancel that races
-    * a completed collect keeps CANCELLED (the reference's status_ also
-    * reports what the CLIENT requested, context.py:3192).
-    */
-  private[graft] final class TokenState(val group: String) {
-    @volatile var status: String = "RUNNING"
-    var result: Option[(org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])] = None
-    var error: Option[Throwable] = None
-    val done = new java.util.concurrent.CountDownLatch(1)
-
-    def finish(schema: org.apache.spark.sql.types.StructType,
-        rows: Array[org.apache.spark.sql.Row]): Unit = synchronized {
-      if (status == "RUNNING") { result = Some((schema, rows)); status = "DONE" }
-      done.countDown()
-    }
-    def fail(e: Throwable): Unit = synchronized {
-      if (status == "RUNNING") { error = Some(e); status = "FAILED" }
-      done.countDown()
-    }
-    def markCancelled(): Boolean = synchronized {
-      if (status == "RUNNING") { status = "CANCELLED"; done.countDown(); true }
-      else false
-    }
-  }
+  /** A [[GraftContext.sqlToken]] result: schema and collected rows. */
+  private type Result = (StructType, Array[Row])
 
   final case class LogRow(logId: Long, logTime: java.sql.Timestamp,
       rootOp: String, planHead: String, durationMs: Double,

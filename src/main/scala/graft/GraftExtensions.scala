@@ -13,12 +13,25 @@ import graft.functions.{BloomContainsExpr, BloomPositionsExpr, CharEntropyExpr, 
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * Same registrations as `graft.functions.registerSql(spark)` (which
-  * remains for already-built sessions); this is the config-driven variant
-  * the reference exposes through engine startup flags
+  * The function list is defined once, in the companion's
+  * [[GraftExtensions.functions]]: this class injects it, and
+  * `graft.functions.registerSql(spark)` registers whatever of it an
+  * already-built session lacks. This is the config-driven variant the
+  * reference exposes through engine startup flags
   * (/root/reference pyblazing context.py:1291 BlazingContext config).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    // custom whole-operator plans (LogicalPlan + SparkPlan pairs) and the
+    // optimizer rewrite that recognizes the row_number top-k idiom
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
+
+object GraftExtensions {
+  type Builder = Seq[Expression] => Expression
 
   private def litNum(e: Expression, fn: String, arg: String): Long = e match {
     case Literal(v: Int, _)   => v.toLong
@@ -33,60 +46,67 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       throw new IllegalArgumentException(
         s"$fn expects $min..$max arguments, got ${exprs.size}")
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // custom whole-operator plans (LogicalPlan + SparkPlan pairs) and the
-    // optimizer rewrite that recognizes the row_number top-k idiom
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (exprs: Seq[Expression]) => {
-        arity("cosine_similarity", exprs, 2, 2)
-        CosineSimilarity(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (exprs: Seq[Expression]) => {
-        arity("minhash_signature", exprs, 1, 3)
-        val k = if (exprs.size >= 2) litNum(exprs(1), "minhash_signature", "k").toInt else 128
-        val seed = if (exprs.size >= 3) litNum(exprs(2), "minhash_signature", "seed") else 42L
-        MinHashSignature(exprs(0), k, seed)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_text"),
-      new ExpressionInfo(classOf[MinHashText].getName, "minhash_text"),
-      (exprs: Seq[Expression]) => {
-        arity("minhash_text", exprs, 1, 4)
-        val n = if (exprs.size >= 2) litNum(exprs(1), "minhash_text", "n").toInt else 3
-        val k = if (exprs.size >= 3) litNum(exprs(2), "minhash_text", "k").toInt else 128
-        val seed = if (exprs.size >= 4) litNum(exprs(3), "minhash_text", "seed") else 42L
-        MinHashText(exprs(0), n, k, seed)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => {
-        arity("simhash64", exprs, 1, 1)
-        SimHash64(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (exprs: Seq[Expression]) => {
-        arity("normalize_text", exprs, 1, 1)
-        NormalizeText(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => {
-        arity("nfc_normalize", exprs, 1, 1)
-        NfcNormalize(exprs(0))
-      }))
-    // the one-pass text kernels, SQL-callable like their Column twins
+  private def fn(name: String, cls: Class[_])(build: Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Every SQL-surface function: name, info and a builder that validates
+    * arity and reads optional integer parameters from foldable literals
+    * (silent defaulting on extra args would return wrong signatures). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("cosine_similarity", classOf[CosineSimilarity]) { e =>
+      arity("cosine_similarity", e, 2, 2)
+      CosineSimilarity(e(0), e(1))
+    },
+    fn("minhash_signature", classOf[MinHashSignature]) { e =>
+      arity("minhash_signature", e, 1, 3)
+      val k = if (e.size >= 2) litNum(e(1), "minhash_signature", "k").toInt else 128
+      val seed = if (e.size >= 3) litNum(e(2), "minhash_signature", "seed") else 42L
+      MinHashSignature(e(0), k, seed)
+    },
+    fn("minhash_text", classOf[MinHashText]) { e =>
+      arity("minhash_text", e, 1, 4)
+      val n = if (e.size >= 2) litNum(e(1), "minhash_text", "n").toInt else 3
+      val k = if (e.size >= 3) litNum(e(2), "minhash_text", "k").toInt else 128
+      val seed = if (e.size >= 4) litNum(e(3), "minhash_text", "seed") else 42L
+      MinHashText(e(0), n, k, seed)
+    },
+    fn("winnow_fps", classOf[WinnowFpsExpr]) { e =>
+      arity("winnow_fps", e, 1, 3)
+      val k = if (e.size >= 2) litNum(e(1), "winnow_fps", "k").toInt else 5
+      val w = if (e.size >= 3) litNum(e(2), "winnow_fps", "w").toInt else 4
+      WinnowFpsExpr(e(0), k, w)
+    },
+    fn("sig_eq_count", classOf[SigEqCount]) { e =>
+      arity("sig_eq_count", e, 2, 2)
+      SigEqCount(e(0), e(1))
+    },
+    // sketch double-hash family: (key, m, k) / (bits, key, m, k) /
+    // (cms, key, w, d) / (cells, bits)
+    fn("bloom_positions", classOf[BloomPositionsExpr]) { e =>
+      arity("bloom_positions", e, 3, 3)
+      BloomPositionsExpr(e(0), litNum(e(1), "bloom_positions", "m").toInt,
+        litNum(e(2), "bloom_positions", "k").toInt)
+    },
+    fn("bloom_contains", classOf[BloomContainsExpr]) { e =>
+      arity("bloom_contains", e, 4, 4)
+      BloomContainsExpr(e(0), e(1), litNum(e(2), "bloom_contains", "m").toInt,
+        litNum(e(3), "bloom_contains", "k").toInt)
+    },
+    fn("cms_estimate", classOf[CmsEstimateExpr]) { e =>
+      arity("cms_estimate", e, 4, 4)
+      CmsEstimateExpr(e(0), e(1), litNum(e(2), "cms_estimate", "w").toInt,
+        litNum(e(3), "cms_estimate", "d").toInt)
+    },
+    fn("morton_interleave", classOf[MortonInterleaveExpr]) { e =>
+      arity("morton_interleave", e, 2, 2)
+      MortonInterleaveExpr(e(0), litNum(e(1), "morton_interleave", "bits").toInt)
+    }
+  ) ++
+    // one-argument kernels, SQL-callable like their Column twins
     Seq[(String, Class[_], Expression => Expression)](
+      ("simhash64", classOf[SimHash64], SimHash64(_)),
+      ("normalize_text", classOf[NormalizeText], NormalizeText(_)),
+      ("nfc_normalize", classOf[NfcNormalize], NfcNormalize(_)),
       ("lang_id", classOf[LangIdExpr], LangIdExpr(_)),
       ("char_entropy", classOf[CharEntropyExpr], CharEntropyExpr(_)),
       ("quality_stats", classOf[QualityStatsExpr], QualityStatsExpr(_)),
@@ -94,82 +114,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ("read_counts", classOf[ReadCountsExpr], ReadCountsExpr(_)),
       ("rep_stats", classOf[RepStatsExpr], RepStatsExpr(_)),
       ("replay_simhash", classOf[ReplaySimhashExpr], ReplaySimhashExpr(_))
-    ).foreach { case (name, cls, mk) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (exprs: Seq[Expression]) => {
-          arity(name, exprs, 1, 1)
-          mk(exprs(0))
-        }))
-    }
+    ).map { case (name, cls, mk) =>
+      fn(name, cls) { e => arity(name, e, 1, 1); mk(e(0)) }
+    } ++
     // text + integer-literal gram/window params
     Seq[(String, Class[_], (Expression, Int) => Expression, Int)](
       ("gram_md5s", classOf[GramMd5sExpr], GramMd5sExpr(_, _), 10),
       ("gram_buckets", classOf[GramBucketsExpr], GramBucketsExpr(_, _), 2),
       ("replay_minhash", classOf[ReplayMinhashExpr], ReplayMinhashExpr(_, _), 3)
-    ).foreach { case (name, cls, mk, dflt) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (exprs: Seq[Expression]) => {
-          arity(name, exprs, 1, 2)
-          val n = if (exprs.size >= 2) litNum(exprs(1), name, "n").toInt else dflt
-          mk(exprs(0), n)
-        }))
+    ).map { case (name, cls, mk, dflt) =>
+      fn(name, cls) { e =>
+        arity(name, e, 1, 2)
+        mk(e(0), if (e.size >= 2) litNum(e(1), name, "n").toInt else dflt)
+      }
     }
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFpsExpr].getName, "winnow_fps"),
-      (exprs: Seq[Expression]) => {
-        arity("winnow_fps", exprs, 1, 3)
-        val k = if (exprs.size >= 2) litNum(exprs(1), "winnow_fps", "k").toInt else 5
-        val w = if (exprs.size >= 3) litNum(exprs(2), "winnow_fps", "w").toInt else 4
-        WinnowFpsExpr(exprs(0), k, w)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sig_eq_count"),
-      new ExpressionInfo(classOf[SigEqCount].getName, "sig_eq_count"),
-      (exprs: Seq[Expression]) => {
-        arity("sig_eq_count", exprs, 2, 2)
-        SigEqCount(exprs(0), exprs(1))
-      }))
-    // sketch double-hash family: (key, m, k) / (bits, key, m, k) /
-    // (cms, key, w, d) / (cells, bits)
-    ext.injectFunction((
-      FunctionIdentifier("bloom_positions"),
-      new ExpressionInfo(classOf[BloomPositionsExpr].getName, "bloom_positions"),
-      (exprs: Seq[Expression]) => {
-        arity("bloom_positions", exprs, 3, 3)
-        BloomPositionsExpr(exprs(0),
-          litNum(exprs(1), "bloom_positions", "m").toInt,
-          litNum(exprs(2), "bloom_positions", "k").toInt)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContainsExpr].getName, "bloom_contains"),
-      (exprs: Seq[Expression]) => {
-        arity("bloom_contains", exprs, 4, 4)
-        BloomContainsExpr(exprs(0), exprs(1),
-          litNum(exprs(2), "bloom_contains", "m").toInt,
-          litNum(exprs(3), "bloom_contains", "k").toInt)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimateExpr].getName, "cms_estimate"),
-      (exprs: Seq[Expression]) => {
-        arity("cms_estimate", exprs, 4, 4)
-        CmsEstimateExpr(exprs(0), exprs(1),
-          litNum(exprs(2), "cms_estimate", "w").toInt,
-          litNum(exprs(3), "cms_estimate", "d").toInt)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("morton_interleave"),
-      new ExpressionInfo(classOf[MortonInterleaveExpr].getName, "morton_interleave"),
-      (exprs: Seq[Expression]) => {
-        arity("morton_interleave", exprs, 2, 2)
-        MortonInterleaveExpr(exprs(0),
-          litNum(exprs(1), "morton_interleave", "bits").toInt)
-      }))
-  }
 }

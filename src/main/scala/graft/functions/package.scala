@@ -235,45 +235,15 @@ package object functions {
   def nfc_normalize(text: Column): Column =
     col0(NfcNormalize(expr0(text)))
 
-  /** Register the SQL-surface names for the custom expressions.
-    * Arities are validated and optional k/seed arguments of
-    * `minhash_signature(arr[, k[, seed]])` are read from foldable literals —
-    * silent defaulting on extra args would return wrong signatures.
+  /** Register the SQL-surface functions ([[graft.GraftExtensions.functions]],
+    * the one list the extensions inject) that `spark`'s registry lacks —
+    * for a session built without `spark.sql.extensions=graft.GraftExtensions`.
+    * On an engine session every name is already there and this is a no-op.
     */
   def registerSql(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-
-    def litNum(e: Expression, fn: String, arg: String): Long = e match {
-      case Literal(v: Int, _)   => v.toLong
-      case Literal(v: Long, _)  => v
-      case Literal(v: Short, _) => v.toLong
-      case Literal(v: Byte, _)  => v.toLong
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument '$arg' must be an integer literal, got $other")
-    }
-    def arity(fn: String, exprs: Seq[Expression], min: Int, max: Int): Unit =
-      if (exprs.size < min || exprs.size > max)
-        throw new IllegalArgumentException(
-          s"$fn expects $min..$max arguments, got ${exprs.size}")
-
     val reg = spark.sessionState.functionRegistry
-    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin // touch to ensure init
-    reg.createOrReplaceTempFunction("cosine_similarity",
-      exprs => { arity("cosine_similarity", exprs, 2, 2)
-        CosineSimilarity(exprs(0), exprs(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => { arity("minhash_signature", exprs, 1, 3)
-        val k = if (exprs.size >= 2) litNum(exprs(1), "minhash_signature", "k").toInt else 128
-        val seed = if (exprs.size >= 3) litNum(exprs(2), "minhash_signature", "seed") else 42L
-        MinHashSignature(exprs(0), k, seed) }, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => { arity("simhash64", exprs, 1, 1)
-        SimHash64(exprs(0)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("normalize_text",
-      exprs => { arity("normalize_text", exprs, 1, 1)
-        NormalizeText(exprs(0)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => { arity("nfc_normalize", exprs, 1, 1)
-        NfcNormalize(exprs(0)) }, "scala_udf")
+    graft.GraftExtensions.functions.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
+    }
   }
 }

@@ -9,14 +9,16 @@ import org.apache.spark.sql.DataFrame
   * session lifetime. Kept operator-internal: query code never needs it.
   *
   * Ownership is PER THREAD: each thread that builds an operator plan owns
-  * (and releases) exactly the intermediates it registered. This is what
-  * makes concurrent queries safe — `GraftContext.sqlToken` runs each
-  * query's build+materialize+release cycle on its own worker thread, so
-  * one job's `release()` can never unpersist another in-flight job's
-  * signatures (with a process-global registry it silently would, forcing
-  * recomputes mid-query). Sequential harness use (Verify/Bench/tests)
-  * is single-threaded and sees the old register-then-release contract
-  * unchanged.
+  * (and releases) exactly the intermediates it registered. So two threads
+  * that each build, materialize and release operator pipelines on one
+  * session never unpersist each other's in-flight intermediates (with a
+  * process-global registry one thread's `release()` silently would,
+  * forcing recomputes mid-query). `GraftContext.sqlToken` is not such a
+  * thread: its SQL resolves already-registered tables and scalar
+  * functions, builds no operator intermediates, and neither registers
+  * nor releases here; whatever the tables' own DataFrames registered
+  * belongs to the thread that built them. Sequential harness use
+  * (Verify/Bench/tests) is single-threaded: register, then release.
   */
 private[graft] object Caches {
   private val local =

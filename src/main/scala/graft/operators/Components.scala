@@ -55,21 +55,6 @@ object Components {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
-    // `spark.graft.components.log=true` prints a per-stage wall-clock
-    // breakdown to stderr (edge materialization vs each propagate/jump
-    // round vs convergence probe) — the decomposition a capacity review
-    // needs before touching the algorithm; off by default.
-    val logRounds =
-      spark.conf.get("spark.graft.components.log", "false").toBoolean
-    def timed[T](tag: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val out = body
-      if (logRounds) System.err.println(
-        f"[components] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      out
-    }
-
     // Materialize the pair source ONCE before fanning out — as a
     // lineage-truncating snapshot, not a bare persist: edges reference it
     // three times (two symmetric branches + the node set), and when the
@@ -95,10 +80,8 @@ object Components {
     val edges = sym.unionAll(nodes.select(col("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    var labels = timed("init-labels (edges+LSH)") { snapshot(
-      nodes.select(col("src").as("id"), col("src").as("comp"))) }
-    var prevSum = timed("init-sum") {
-      labels.agg(sum(col("comp"))).head().getLong(0) }
+    var labels = snapshot(nodes.select(col("src").as("id"), col("src").as("comp")))
+    var prevSum = labels.agg(sum(col("comp"))).head().getLong(0)
 
     var iter = 0
     var converged = false
@@ -116,10 +99,10 @@ object Components {
       // dedup_clusters 2.9 → 4.4-6.8 s. The eager snapshot per stage is
       // load-bearing: it makes the self-join read materialized blocks
       // instead of planning the propagate subtree twice.
-      val relabeled = timed(s"round-$iter propagate") { snapshot(edges
+      val relabeled = snapshot(edges
         .join(labels.select(col("id").as("dst"), col("comp")), Seq("dst"))
         .groupBy(col("src")).agg(min(col("comp")).as("comp"))
-        .select(col("src").as("id"), col("comp"))) }
+        .select(col("src").as("id"), col("comp")))
 
       // (2) pointer jump: comp <- comp(comp). Labels are node ids, so the
       // lookup is a self-join; least() guards already-minimal rows.
@@ -129,14 +112,12 @@ object Components {
         .select(col("id"),
           least(col("comp"), coalesce(col("ccomp"), col("comp"))).as("comp"))
 
-      labels = timed(s"round-$iter jump") { snapshot(jumped) }
-      val s = timed(s"round-$iter sum-probe") {
-        labels.agg(sum(col("comp"))).head().getLong(0) }
+      labels = snapshot(jumped)
+      val s = labels.agg(sum(col("comp"))).head().getLong(0)
       converged = s == prevSum // labels only ever decrease; equal sum = fixed point
       prevSum = s
       iter += 1
     }
-    if (logRounds) System.err.println(s"[components] rounds=$iter")
     edges.unpersist(blocking = false)
     // p is a snapshot (localCheckpoint-backed blocks, not a registered
     // cache entry): its storage is released when the RDD is GC'd via the

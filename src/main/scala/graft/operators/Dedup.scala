@@ -67,22 +67,15 @@ object Dedup {
     * estimate (the same signal `dim()` broadcasts on): above the
     * threshold the scale machinery engages; below it the plans keep the
     * direct small-corpus shapes, which are both faster and broadcast-
-    * safe there. Conf `spark.graft.lsh.scalePath.minInputBytes`
-    * (default 256 MB — sf100's 590 MB documents qualify, sf0.1's ~6 MB
-    * do not); tests pin it to 0 to force the scale path on in-memory
-    * corpora.
+    * safe there. Conf `spark.graft.scalePath.minInputBytes` (default
+    * 256 MB — sf100's 590 MB documents qualify, sf0.1's ~6 MB do not);
+    * tests pin it to 0 to force the scale path on in-memory corpora. The
+    * gate is shared beyond LSH: the KN/bigram LM ladders hint their joins
+    * through it too, so pinning the key flips every size-gated family.
     */
   private[graft] def scaleLsh(source: DataFrame): Boolean = {
-    // The gate is shared beyond LSH (the KN/bigram LM ladders hint
-    // their joins through it too — ADVICE r13), so the neutral key
-    // `spark.graft.scalePath.minInputBytes` is authoritative; the
-    // historical lsh-named key stays honored as a fallback because
-    // existing tests/tools pin it to 0 to force the scale path on tiny
-    // fixtures. Pinning EITHER key flips every size-gated family.
-    val conf = source.sparkSession.conf
-    val threshold = conf.get("spark.graft.scalePath.minInputBytes",
-      conf.get("spark.graft.lsh.scalePath.minInputBytes",
-        (256L << 20).toString))
+    val threshold = source.sparkSession.conf.get(
+      "spark.graft.scalePath.minInputBytes", (256L << 20).toString)
     val t = scala.util.Try(threshold.trim.toLong).getOrElse(256L << 20)
     source.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(t)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** Text analysis for training-data curation: language ID, quality scores,
   * token counting, fingerprinting. All pure `functions._` compositions —
@@ -770,12 +771,16 @@ object TextAnalysis {
     // executedPlan.outputPartitioning, and AdaptiveSparkPlanExec never
     // overrides outputPartitioning — an AQE-wrapped plan ALWAYS reports
     // UnknownPartitioning into the checkpoint (plan-verified: every
-    // ladder consumer re-exchanged). Disabling AQE for exactly these
-    // two small builds (one pinned-count repartition, one
-    // exchange-free aggregate over it) makes the captured partitioning
-    // HashPartitioning(v, N); the CONSUMING query keeps full AQE. The
-    // explicit count matters too: an un-numbered repartition would be
-    // legitimate AQE-coalesce bait on the consumer side.
+    // ladder consumer re-exchanged). Planning exactly these two small
+    // builds (one pinned-count repartition, one exchange-free aggregate
+    // over it) with AQE off makes the captured partitioning
+    // HashPartitioning(v, N). They plan in a CLONE of the session with
+    // AQE off in the clone's own conf, so the caller's session — and any
+    // query planned on it concurrently — keeps AQE throughout; each
+    // checkpoint's LogicalRDD is then rebound to the caller's session,
+    // where the CONSUMING query plans with full AQE. The explicit count
+    // matters too: an un-numbered repartition would be legitimate
+    // AQE-coalesce bait on the consumer side.
     val sess = docs.sparkSession
     val vParts = sess.sessionState.conf.numShufflePartitions
     val (c3, chatOpt) =
@@ -784,14 +789,14 @@ object TextAnalysis {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
           None)
       else {
-        val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        try {
-          val c3ck = c3base.repartition(vParts, col("v")).localCheckpoint()
-          val chatCk = c3ck.groupBy(col("v"), col("w"))
-            .agg(count(lit(1)).as("chat")).localCheckpoint()
-          (c3ck, Some(chatCk))
-        } finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        val noAqe = Shims.cloneSession(sess,
+          Seq("spark.sql.adaptive.enabled" -> "false"))
+        val c3ck = Shims.ofRows(noAqe, c3base.queryExecution.logical)
+          .repartition(vParts, col("v")).localCheckpoint()
+        val chatCk = c3ck.groupBy(col("v"), col("w"))
+          .agg(count(lit(1)).as("chat")).localCheckpoint()
+        def rebind(ck: DataFrame) = Shims.ofRows(sess, ck.queryExecution.logical)
+        (rebind(c3ck), Some(rebind(chatCk)))
       }
     val cctx3 = c3.groupBy(col("u"), col("v"))
       .agg(sum(col("c3")).as("cv3"), count(lit(1)).as("n1f3"))

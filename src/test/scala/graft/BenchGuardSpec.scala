@@ -144,6 +144,22 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.jsonStr("-- c\nSELECT 1") == """"-- c\nSELECT 1"""")
   }
 
+  test("canaryMax keeps the 32-core ceilings and widens on few cores") {
+    val sf01 = 17L << 20 // sf0.1 fixtures
+    val sf100 = 17L << 30
+    // at and above 32 cores: the ceilings set from 32-core legs
+    for (cores <- Seq(32, 64)) {
+      assert(Bench.canaryMax(sf01, cores) == 0.35)
+      assert(Bench.canaryMax(sf100, cores) == 3.6)
+    }
+    // 4 cores, sf0.1: a clean leg's 0.375 s start canary (two 4-vCPU legs
+    // whose totals agreed within 0.1 %) must sit inside the band, with the
+    // usual 1.6× headroom
+    assert(Bench.canaryMax(sf01, 4) >= 1.6 * 0.375)
+    // the contaminated 0.66 s r12 reading stays flagged on 32 cores
+    assert(Bench.canaryMax(sf01, 32) < 0.66)
+  }
+
   test("selectQueries fails fast on names that are not registered") {
     val reg = Map("q3_topk" -> 3, "q1_agg" -> 1, "join_full" -> 5)
     assert(Bench.selectQueries(None, reg) ==

@@ -96,7 +96,7 @@ class DedupGuardSpec extends SparkSuite {
       (4L, "totally different content with no shared tokens at all here"),
       (5L, "yet another unrelated document body of words entirely")
     ).toDF("doc_id", "text")
-    val key = "spark.graft.lsh.scalePath.minInputBytes"
+    val key = "spark.graft.scalePath.minInputBytes"
     val direct = Dedup.simHashPairsBlockedReplayable(docs)
       .collect().toSet
     spark.conf.set(key, "0")

@@ -112,6 +112,55 @@ class GraftContextSpec extends SparkSuite {
     ctx.dropTable("gc_cfg_nation")
   }
 
+  test("sql(query, configOptions) resolves createTableFromCatalog aliases") {
+    val ctx = GraftContext(spark)
+    Tables.load(spark, sfDir, "nation").write.mode("overwrite")
+      .saveAsTable("gc_cfg_catalog_nation")
+    try {
+      ctx.createTableFromCatalog("gc_cfg_catalog_nation", "gc_cfg_alias")
+      val q = "SELECT n_regionkey, count(*) AS n FROM gc_cfg_alias " +
+        "GROUP BY n_regionkey ORDER BY n_regionkey"
+      val expected = ctx.sql(q).collect().map(_.toString).toSeq
+      assert(expected.nonEmpty)
+      assert(ctx.sql(q, Map("EXECUTOR_THREADS" -> "3"))
+        .collect().map(_.toString).toSeq == expected)
+    } finally {
+      ctx.dropTable("gc_cfg_alias")
+      spark.sql("DROP TABLE IF EXISTS gc_cfg_catalog_nation")
+    }
+  }
+
+  test("sql(query, configOptions) queries reach log()") {
+    val ctx = GraftContext(spark)
+    ctx.createTable("gc_cfg_log_nation", s"$sfDir/nation.parquet")
+    try {
+      ctx.sql("SELECT n_name AS cfg_log_marker FROM gc_cfg_log_nation",
+        Map("EXECUTOR_THREADS" -> "3")).collect()
+      // QueryExecutionListener delivery is async — poll until the row lands
+      val deadline = System.currentTimeMillis() + 15000
+      var n = 0L
+      while (n == 0 && System.currentTimeMillis() < deadline) {
+        n = ctx.log("SELECT count(*) AS n FROM graft_logs " +
+          "WHERE success AND plan_head LIKE '%cfg_log_marker%'")
+          .collect()(0).getLong(0)
+        if (n == 0) Thread.sleep(200)
+      }
+      assert(n > 0, "configOptions query missing from the log")
+    } finally ctx.dropTable("gc_cfg_log_nation")
+  }
+
+  test("registerSql adds the extension functions a session lacks") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    assert(reg.dropFunction(FunctionIdentifier("minhash_text")))
+    assert(!reg.functionExists(FunctionIdentifier("minhash_text")))
+    graft.functions.registerSql(s)
+    val k = s.sql("SELECT size(minhash_text('the quick brown fox jumps', 2, 16))")
+      .collect().head.getInt(0)
+    assert(k == 16)
+  }
+
   test("query log records materialized queries, queryable via log()") {
     val ctx = GraftContext(spark)
     ctx.createTable("gc_log_nation", s"$sfDir/nation.parquet")
@@ -274,6 +323,30 @@ class GraftContextSpec extends SparkSuite {
     intercept[IllegalStateException] { ctx.fetch(tok, timeoutMs = 60000) }
     // cancel on a finished token is a no-op
     ctx.cancel(tok)
+  }
+
+  test("sqlToken: the submitting thread's job tags reach the token's jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val ctx = GraftContext(spark)
+    val sc = spark.sparkContext
+    val tag = "gc-token-tag-probe"
+    val tagged = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) tagged.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val tok = ctx.sqlToken("SELECT id % 3 AS k, count(*) AS n FROM range(1000) GROUP BY 1")
+      assert(ctx.fetch(tok, timeoutMs = 60000).count() == 3)
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc, 10000))
+      assert(tagged.get() > 0, s"no job of the token carried job tag $tag")
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("writeSharded caps file sizes and lays out hive partitions") {

@@ -18,7 +18,7 @@ class PlanMemoSpec extends SparkSuite {
     * input size — these specs exist to exercise exactly that machinery
     * on small in-memory / tiny-file corpora. */
   private def forcingScalePath[T](body: => T): T = {
-    val key = "spark.graft.lsh.scalePath.minInputBytes"
+    val key = "spark.graft.scalePath.minInputBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "0")
     try body

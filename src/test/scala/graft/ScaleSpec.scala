@@ -470,6 +470,52 @@ class ScaleSpec extends SparkSuite {
     }
   }
 
+  /** Build forced-gate (scale path) `text_perplexity_kn3`, release its
+    * caches and restore the gate. */
+  private def forcedKn3[T](use: org.apache.spark.sql.DataFrame => T): T = {
+    val key = "spark.graft.scalePath.minInputBytes"
+    spark.conf.set(key, "0")
+    try use(SparkEntry.queries("text_perplexity_kn3")(spark, sfDir))
+    finally {
+      spark.conf.unset(key)
+      operators.Dedup.releaseCaches()
+    }
+  }
+
+  test("KN3 scale path never turns the session's AQE off") {
+    // the checkpointed subtrees plan with AQE off; a query planned on the
+    // same session meanwhile must still see AQE on
+    val aqe = "spark.sql.adaptive.enabled"
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val offReads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val poller = new Thread(() => {
+      while (!stop.get()) {
+        if (spark.conf.get(aqe) == "false") offReads.incrementAndGet()
+        reads.incrementAndGet()
+        Thread.sleep(1)
+      }
+    })
+    poller.start()
+    try forcedKn3(_ => ())
+    finally { stop.set(true); poller.join() }
+    assert(reads.get() > 0)
+    assert(offReads.get() == 0,
+      s"AQE read false ${offReads.get()} times out of ${reads.get()}")
+    assert(spark.conf.get(aqe) == "true")
+  }
+
+  test("KN3 scale path plans no more exchanges than the save/restore build did") {
+    // 9: what the build that flipped AQE off and back on the session
+    // around the checkpoints planned on this fixture and session
+    val before = 9
+    val exchanges = forcedKn3 { df =>
+      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
+    }
+    assert(exchanges <= before,
+      s"forced-gate kn3 plans $exchanges exchanges, was $before")
+  }
+
   test("zorder zvalue attaches via one broadcast stats row, no extra shuffle") {
     val li = Tables.load(spark, sfDir, "lineitem")
     val plan = operators.ZOrder.zvalues(li, Seq("l_partkey", "l_suppkey"))
