@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 
@@ -83,7 +84,9 @@ private[graft] object SampleRecorder {
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock,
   * and per query a `layers` record of its last scored sample: construct
   * / plan / exec seconds and the jobs, stages, tasks, shuffle bytes,
-  * executor run time and GC time the [[SampleRecorder]] credited to it.
+  * executor run time and GC time the [[SampleRecorder]] credited to it,
+  * and the generated classes it compiled (`codegen_compiles`, also
+  * totalled over the leg).
   * `SPARK_GRAFT_ONLY=<q>[,<q>...]` profiles a subset the same way.
   *
   * local[32] with shuffle.partitions=32 (one task wave per shuffle) and
@@ -248,11 +251,18 @@ object Bench {
         else Right(registered.toSeq.filter(q => names(q._1)).sortBy(_._1))
     }
 
-  /** A sample's `layers` record: its construct / plan / exec split and
-    * the execution counters credited to it. */
+  /** A sample's `layers` record: its construct / plan / exec split, the
+    * execution counters credited to it and the generated classes it
+    * compiled. */
   private[graft] def layersJson(constructS: Double, planS: Double,
-      execS: Double, s: SampleStats): String =
-    s"""{"construct_s":$constructS,"plan_s":$planS,"exec_s":$execS,"jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},"shuffle_read_bytes":${s.shuffleReadBytes},"shuffle_write_bytes":${s.shuffleWriteBytes},"executor_run_s":${s.executorRunMs / 1e3},"gc_s":${s.gcMs / 1e3}}"""
+      execS: Double, s: SampleStats, codegenCompiles: Long): String =
+    s"""{"construct_s":$constructS,"plan_s":$planS,"exec_s":$execS,"jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},"shuffle_read_bytes":${s.shuffleReadBytes},"shuffle_write_bytes":${s.shuffleWriteBytes},"executor_run_s":${s.executorRunMs / 1e3},"gc_s":${s.gcMs / 1e3},"codegen_compiles":$codegenCompiles}"""
+
+  /** Janino compiles so far in this JVM (driver and, in local mode,
+    * executor tasks alike): a class served from CodeGenerator's cache
+    * does not count. */
+  private def codegenCompiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Clean-band ceiling of the start canary, in seconds. Bands observed
     * on 32-core legs over rounds 10-12: sf0.1 clean 0.13-0.22 s
@@ -457,7 +467,8 @@ object Bench {
     // median. All samples are emitted so regressions stay auditable.
     case class QueryResult(name: String, value: Double, samples: List[Double],
         skewJoins: Int, spillMem: Long, spillDisk: Long,
-        sampleTs: List[Double], bmDrain: List[(Long, Long)], layers: String)
+        sampleTs: List[Double], bmDrain: List[(Long, Long)], layers: String,
+        codegenCompiles: Long)
     var sampleSeq = 0
     val results = selected.map { case (name, fn) =>
       // one timed execution through the query's OWN plan (toRdd): a
@@ -472,6 +483,8 @@ object Bench {
       var skewJoins = 0
       // memory/disk spill bytes over all of the query's samples
       var spillMem = 0L; var spillDisk = 0L
+      // generated classes compiled over all of the query's samples
+      var compiles = 0L
       // layers of the latest successful sample — the last scored one
       // whenever the query succeeds (scored samples are the tail)
       var layers = ""
@@ -486,6 +499,9 @@ object Bench {
         sampleSeq += 1
         val tag = s"$name#$sampleSeq"
         val wall0 = System.currentTimeMillis() / 1000.0
+        // the compile count is JVM-global: Bench runs one sample at a
+        // time, so the delta over the sample is the sample's own
+        val cg0 = codegenCompiles()
         // construct = the query function, plan = analyze + optimize +
         // physical planning (forced here; toRdd would force it anyway),
         // exec = AQE round-trips, scheduling and compute
@@ -512,9 +528,11 @@ object Bench {
         org.apache.spark.sql.graft.Shims.drainListenerBus(
           spark.sparkContext, 10000L)
         val stats = recorder.take(tag)
+        val sampleCompiles = codegenCompiles() - cg0
         spillMem += stats.memorySpillBytes; spillDisk += stats.diskSpillBytes
+        compiles += sampleCompiles
         if (ok) layers = layersJson((t1 - t0) / 1e9, (t2 - t1) / 1e9,
-          (t3 - t2) / 1e9, stats)
+          (t3 - t2) / 1e9, stats, sampleCompiles)
         graft.operators.Dedup.releaseCaches()
         // Shuffle-file hygiene at data scale (≥1 GiB fixtures, same
         // threshold as discard_first): a completed job's shuffle files
@@ -557,7 +575,7 @@ object Bench {
       }
       QueryResult(name, value, samples, skewJoins, spillMem, spillDisk,
         sampleTs.toList, bmDrain.toList,
-        if (scored.isEmpty) "" else layers)
+        if (scored.isEmpty) "" else layers, compiles)
     }
     def perQuery(rs: Seq[QueryResult])(v: QueryResult => String): String =
       rs.map(r => jsonStr(r.name) + ":" + v(r)).mkString("{", ",", "}")
@@ -580,6 +598,8 @@ object Bench {
       _.bmDrain.map { case (pre, post) =>
         "[" + (pre >> 20) + "," + (post >> 20) + "]" }.mkString("[", ",", "]"))
     val layersAll = perQuery(results.filter(_.layers.nonEmpty))(_.layers)
+    // generated classes compiled over every sample of the leg
+    val compilesAll = results.map(_.codegenCompiles).sum
     val total = results.filter(_.samples.nonEmpty).map(_.value).sum
     val canaryEnd = canarySec()
 
@@ -676,7 +696,7 @@ object Bench {
         (Runtime.getRuntime.maxMemory >> 30) + "g(driver-heap)")
     val stamp = java.time.Instant.now().toString
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"layers":$layersAll,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"layers":$layersAll,"codegen_compiles":$compilesAll,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
     println(json)
     // the stdout line overflows log-tail captures (the driver's BENCH_r*
     // 'parsed' field has been null every round) — also write the JSON to a

@@ -11,6 +11,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayDeque
 import scala.concurrent.{ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 /** User-facing context with the reference's `BlazingContext` surface
   * (/root/reference pyblazing/pyblazing/apiv2/context.py:1291): named table
@@ -833,9 +834,15 @@ object GraftContext {
             s"$name={$kv}"
           }.mkString("; ").take(1000)
           catch { case _: Throwable => "" }
+        // a query that failed analysis rethrows that error from
+        // optimizedPlan: root it at its parsed plan so the failure still
+        // gets its row
+        val rootOp =
+          try qe.optimizedPlan.nodeName
+          catch { case NonFatal(_) => qe.logical.nodeName }
         val row = LogRow(nextLogId.getAndIncrement(),
           new java.sql.Timestamp(System.currentTimeMillis()),
-          qe.optimizedPlan.nodeName,
+          rootOp,
           qe.logical.treeString.linesIterator.take(1).mkString.take(500),
           durationNs / 1e6, err.isEmpty, err.getOrElse(""), metrics)
         rows.synchronized {
@@ -1036,6 +1043,23 @@ object GraftContext {
       // co-partitioned sides pin their partition count to
       // spark.sql.shuffle.partitions, so join parallelism is unchanged.
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+      // Generated-code class cache sized to the engine's working set.
+      // Whole-stage codegen amortises its Janino compile only while
+      // CodeGenerator's JVM-wide cache holds the class, and Spark keys
+      // that cache by (thread context classloader, source): in local mode
+      // the driver and the executor tasks each cache their own copy, and
+      // Guava splits the default 100 entries into 4 segments of 25. Warm
+      // 12 s benchmark windows (4 vCPUs) kept evicting and recompiling
+      // classes they had already built: 67-127 compiles in every
+      // 3-client short-SQL window, 50-120 in half the curation windows
+      // (the other half fit by hashing luck); the 199-query sf0.01 Bench
+      // battery compiled 4 043 times. 4096 entries (1 024 per segment)
+      // hold the whole registry: 0 compiles in every warm window, 2 597
+      // over the battery, metaspace at its end 206 MB against 188 MB.
+      // A static conf, read ONCE per JVM when CodeGenerator is first
+      // used: a JVM whose first session was built elsewhere keeps
+      // Spark's 100.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** [[sessionBuilder]] plus the environment hooks the mains share (never
     * [[buildSession]], which reads no environment):

@@ -179,22 +179,23 @@ class BenchGuardSpec extends AnyFunSuite {
       SparkEntry.queries).isLeft)
   }
 
-  test("layersJson is one JSON object with the ten layer fields") {
+  test("layersJson is one JSON object with every layer field") {
     val line = Bench.layersJson(0.25, 0.5, 1.5, SampleStats(jobs = 3,
       stages = 4, tasks = 12, shuffleReadBytes = 100, shuffleWriteBytes = 200,
       memorySpillBytes = 7, diskSpillBytes = 8, executorRunMs = 1500,
-      gcMs = 20))
+      gcMs = 20), codegenCompiles = 5)
     val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(line)
     import scala.jdk.CollectionConverters._
     assert(parsed.fieldNames.asScala.toSeq == Seq("construct_s", "plan_s",
       "exec_s", "jobs", "stages", "tasks", "shuffle_read_bytes",
-      "shuffle_write_bytes", "executor_run_s", "gc_s"))
+      "shuffle_write_bytes", "executor_run_s", "gc_s", "codegen_compiles"))
     assert(parsed.get("exec_s").asDouble() == 1.5)
     assert(parsed.get("tasks").asLong() == 12L)
     assert(parsed.get("shuffle_write_bytes").asLong() == 200L)
     assert(parsed.get("executor_run_s").asDouble() == 1.5)
     assert(parsed.get("gc_s").asDouble() == 0.02)
+    assert(parsed.get("codegen_compiles").asLong() == 5L)
   }
 
   test("foreignSparkJvms tolerates a truncated process table (no cycles)") {

@@ -309,6 +309,23 @@ class GraftContextSpec extends SparkSuite {
     assert(ctx.tokenStatus(tok) == "FAILED")
   }
 
+  test("a query that fails analysis gets its success = false log row") {
+    val ctx = GraftContext(spark)
+    val sc = spark.sparkContext
+    def drain(): Unit =
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc, 10000))
+    drain()
+    val before = ctx.log("SELECT coalesce(max(log_id), -1) FROM graft_logs")
+      .collect()(0).getLong(0)
+    val tok = ctx.sqlToken("SELECT * FROM definitely_not_a_table_xyz")
+    intercept[Exception] { ctx.fetch(tok, timeoutMs = 60000) }
+    drain()
+    val failed = ctx.log(s"SELECT success, error FROM graft_logs " +
+      s"WHERE log_id > $before AND NOT success").collect()
+    assert(failed.length == 1, failed.mkString("; "))
+    assert(failed(0).getString(1).contains("definitely_not_a_table_xyz"))
+  }
+
   test("sqlToken: cancel kills the running job group") {
     val ctx = GraftContext(spark)
     ctx.createTable("gc_cancel_li", s"$sfDir/lineitem.parquet")

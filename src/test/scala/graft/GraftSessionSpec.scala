@@ -18,7 +18,8 @@ class GraftSessionSpec extends SparkSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64m",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "64m",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096")
     sql.foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, s"session conf $k")
     }
