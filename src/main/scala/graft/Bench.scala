@@ -416,7 +416,9 @@ object Bench {
     val discardFirst = fixtureBytes >= (1L << 30)
     // Per-sample execution counters (jobs, stages, tasks, shuffle bytes,
     // spill, executor run and GC time), credited by sample tag — spill_mb
-    // per query is its samples' memory/disk spill.
+    // per query is its samples' memory/disk spill, which counts the
+    // serialized shuffle writer's ordinary sort-buffer writes (the engine
+    // sets bypassMergeThreshold=0): `spill_semantics` says so.
     val recorder = new SampleRecorder
     spark.sparkContext.addSparkListener(recorder)
     // Shuffle-file DRAIN between samples (r12 verdict: graph_pagerank
@@ -696,7 +698,7 @@ object Bench {
         (Runtime.getRuntime.maxMemory >> 30) + "g(driver-heap)")
     val stamp = java.time.Instant.now().toString
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"blockmgr_mb":$bmJson,"layers":$layersAll,"codegen_compiles":$compilesAll,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$sampleJson,"sample_ts":$sampleTsJson,"samples_policy":"${if (discardFirst) "discard_first" else "all"}","errors":$errs,"skew_joins":$skewJson,"spill_mb":$spillJson,"spill_semantics":"serialized-writer","blockmgr_mb":$bmJson,"layers":$layersAll,"codegen_compiles":$compilesAll,"shuffle_partitions":$shuffleParts,"ambient_canary":{"start_sec":$canaryStart,"end_sec":$canaryEnd},$contentionJson,$conc,"sf":${jsonStr(sfDir)},"master":${jsonStr(master)},"executor_memory":${jsonStr(executorMem)},"git_sha":${jsonStr(gitSha)},"timestamp":${jsonStr(stamp)}}"""
     println(json)
     // the stdout line overflows log-tail captures (the driver's BENCH_r*
     // 'parsed' field has been null every round) — also write the JSON to a

@@ -84,9 +84,7 @@ object Bpe {
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = Caches.register(
-      this.vocab(docs, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val vocab = Caches.persist(this.vocab(docs, textCol))
     var cur = vocab
     val learned = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     // each round's rewritten vocab is persisted so round r+1's pair count
@@ -111,7 +109,7 @@ object Bpe {
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("lsym"), col("rsym"))
         .limit(1).collect()
-      if (older != null) { older.unpersist(blocking = false); older = null }
+      if (older != null) { Caches.drop(older); older = null }
       if (bestRows.isEmpty) {
         // no adjacent pairs anywhere (empty/all-null corpus, or every
         // word already collapsed to a single symbol): stop with the
@@ -121,17 +119,13 @@ object Bpe {
         val best: Row = bestRows(0)
         val (l, r, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
         learned += ((round, l, r, cnt))
-        val next = cur.select(col("word"), col("freq"),
-            applyMerge(col("syms"), l, r).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val next = Caches.persist(cur.select(col("word"), col("freq"),
+            applyMerge(col("syms"), l, r).as("syms")))
         if (!(cur eq vocab)) older = cur
         cur = next
       }
       round += 1
     }
-    // hand any still-persisted round caches to the harness-released registry
-    if (older != null) Caches.register(older)
-    if (!(cur eq vocab)) Caches.register(cur)
     learned.toSeq.toDF("merge_round", "lsym", "rsym", "cnt")
   }
 
@@ -167,9 +161,7 @@ object Bpe {
     require(merges >= 1 && batch >= 1 && candidateFactor >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = Caches.register(
-      this.vocab(docs, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val vocab = Caches.persist(this.vocab(docs, textCol))
     var cur = vocab
     var older: DataFrame = null
     val learned = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
@@ -188,7 +180,7 @@ object Bpe {
         .orderBy(col("cnt").desc, col("lsym"), col("rsym"))
         .limit(batch * candidateFactor)
         .collect()
-      if (older != null) { older.unpersist(blocking = false); older = null }
+      if (older != null) { Caches.drop(older); older = null }
       if (cands.isEmpty) exhausted = true
       else {
         val used = scala.collection.mutable.Set.empty[String]
@@ -206,17 +198,14 @@ object Bpe {
           sel.foreach { case (l, r, c) =>
             learned += ((learned.size + 1, l, r, c))
           }
-          val next = cur.select(col("word"), col("freq"),
-              applyMerges(col("syms"), sel.map(s => (s._1, s._2)).toSeq).as("syms"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val next = Caches.persist(cur.select(col("word"), col("freq"),
+              applyMerges(col("syms"), sel.map(s => (s._1, s._2)).toSeq).as("syms")))
           if (!(cur eq vocab)) older = cur
           cur = next
         }
       }
       pass += 1
     }
-    if (older != null) Caches.register(older)
-    if (!(cur eq vocab)) Caches.register(cur)
     learned.toSeq.toDF("merge_round", "lsym", "rsym", "cnt")
   }
 

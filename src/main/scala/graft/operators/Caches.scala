@@ -1,9 +1,14 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Registry of persisted intermediates produced inside operator plans
-  * (minhash signatures, LSH candidates, k-means assignments). Harness
+/** The one owner of the intermediates operators materialize inside
+  * their plans (minhash signatures, LSH candidates, k-means assignments,
+  * Components' and KN3's snapshots): operators [[persist]], [[checkpoint]]
+  * and [[drop]] through here and never name a storage level. Harness
   * callers release them once the downstream plan has materialized —
   * repeated invocations would otherwise accumulate cached blocks for the
   * session lifetime. Kept operator-internal: query code never needs it.
@@ -18,44 +23,78 @@ import org.apache.spark.sql.DataFrame
   * functions, builds no operator intermediates, and neither registers
   * nor releases here; whatever the tables' own DataFrames registered
   * belongs to the thread that built them. Sequential harness use
-  * (Verify/Bench/tests) is single-threaded: register, then release.
+  * (Verify/Bench/tests) is single-threaded: persist, then release.
   */
 private[graft] object Caches {
+  // an owned intermediate; `ckRdd` is the RDD a checkpoint's LogicalRDD
+  // reads, null for a persist (which the cache manager frees by plan)
+  private final class Entry(val df: DataFrame, ckRdd: RDD[_]) {
+    def persisted = ckRdd == null
+    def free(blocking: Boolean): Unit =
+      if (persisted) df.unpersist(blocking) else ckRdd.unpersist(blocking)
+  }
+
   private val local =
-    new ThreadLocal[scala.collection.mutable.ListBuffer[DataFrame]] {
+    new ThreadLocal[scala.collection.mutable.ListBuffer[Entry]] {
       override def initialValue() =
-        scala.collection.mutable.ListBuffer.empty[DataFrame]
+        scala.collection.mutable.ListBuffer.empty[Entry]
     }
   // global shadow of every live registration, for [[releaseAll]]: a
   // per-thread release() is a silent no-op when the registering thread
   // handed its plan to another thread (Future, pool teardown) — without
   // a session-wide escape hatch those blocks stay cached forever
-  private val all =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
+  private val all = java.util.concurrent.ConcurrentHashMap.newKeySet[Entry]()
 
-  def register(df: DataFrame): DataFrame = { local.get += df; all.add(df); df }
+  private def own(e: Entry): DataFrame = { local.get += e; all.add(e); e.df }
 
-  /** Snapshot of THIS thread's live registrations — test introspection
-    * (lets specs assert on the exact DataFrames a job persisted instead
-    * of racy global persistent-RDD counts). The returned list is an
-    * immutable copy, but the DataFrames are LIVE references: a
-    * concurrent release() on the owning thread may unpersist them while
-    * a caller inspects storage state — fine under the single-owner
-    * contract (only the registering thread snapshots and releases). */
-  private[graft] def registeredHere: Seq[DataFrame] = local.get.toList
+  /** Persist `df` at MEMORY_AND_DISK (lazily, on first use) and own it. */
+  def persist(df: DataFrame): DataFrame =
+    own(new Entry(df.persist(StorageLevel.MEMORY_AND_DISK), null))
 
-  /** Unpersist every DataFrame registered BY THIS THREAD. Contract: call
-    * AFTER materializing (count/collect/write) the consuming plan —
-    * earlier just makes the job recompute the intermediate.
+  /** An eager, lineage-truncating snapshot of `df`: executor blocks, or
+    * files under `sc.setCheckpointDir` (which survive executor loss) when
+    * `reliable`. Its RDD is recorded now, so [[release]] walks no plan.
+    * Once released, a plan reading the snapshot cannot recompute it:
+    * Spark fails with "Checkpoint block … not found". */
+  def checkpoint(df: DataFrame, reliable: Boolean = false): DataFrame = {
+    val ck = if (reliable) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    val rdd = ck.queryExecution.logical match { case r: LogicalRDD => r.rdd }
+    own(new Entry(ck, rdd))
+  }
+
+  /** Free one of THIS thread's entries now, before [[release]] — for an
+    * intermediate a later one has superseded. Anything else is a no-op. */
+  def drop(df: DataFrame): Unit = {
+    val buf = local.get
+    val i = buf.indexWhere(_.df eq df)
+    if (i >= 0) { val e = buf.remove(i); all.remove(e); e.free(false) }
+  }
+
+  /** Snapshot of THIS thread's live persisted registrations (not
+    * checkpoints, whose DataFrames carry no storage level) — test
+    * introspection (lets specs assert on the exact DataFrames a job
+    * persisted instead of racy global persistent-RDD counts). The
+    * returned list is an immutable copy, but the DataFrames are LIVE
+    * references: a concurrent release() on the owning thread may
+    * unpersist them while a caller inspects storage state — fine under
+    * the single-owner contract (only the registering thread snapshots
+    * and releases). */
+  private[graft] def registeredHere: Seq[DataFrame] =
+    local.get.collect { case e if e.persisted => e.df }.toList
+
+  /** Free every entry registered BY THIS THREAD. Contract: call AFTER
+    * materializing (count/collect/write) the consuming plan — earlier
+    * makes the job recompute a persist, and fails a plan that reads a
+    * checkpoint.
     */
   def release(blocking: Boolean = false): Unit = {
     val buf = local.get
-    buf.foreach { df => df.unpersist(blocking); all.remove(df) }
+    buf.foreach { e => e.free(blocking); all.remove(e) }
     buf.clear()
   }
 
-  /** Unpersist EVERY live registration regardless of owning thread — the
+  /** Free EVERY live registration regardless of owning thread — the
     * session-teardown / test-cleanup hatch for intermediates orphaned by
     * a thread that died without releasing. Not safe while other queries
     * are in flight (it is exactly the cross-release the per-thread
@@ -63,7 +102,7 @@ private[graft] object Caches {
     */
   def releaseAll(blocking: Boolean = false): Unit = {
     val it = all.iterator()
-    while (it.hasNext) { it.next().unpersist(blocking); it.remove() }
+    while (it.hasNext) { it.next().free(blocking); it.remove() }
   }
 }
 

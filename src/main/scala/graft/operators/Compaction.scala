@@ -46,9 +46,8 @@ object Compaction {
     // then samples its own boundaries (seeded by RDD id) and graft_pid
     // diverges between branches, corrupting cum_before. One cached copy
     // pins a single partitioning for both readers.
-    val ranged = Caches.register(df.repartitionByRange(orderCols: _*)
-      .withColumn("graft_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val ranged = Caches.persist(df.repartitionByRange(orderCols: _*)
+      .withColumn("graft_pid", spark_partition_id()))
     val byPid = Window.partitionBy(col("graft_pid"))
     val localW = byPid.orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

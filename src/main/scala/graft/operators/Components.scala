@@ -31,30 +31,29 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Truncate `df`'s lineage per the configured checkpoint mode. */
-  private def snapshot(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get("spark.graft.components.checkpoint", "local") match {
-      case "local" => df.localCheckpoint(eager = true)
-      case "reliable" =>
-        require(spark.sparkContext.getCheckpointDir.isDefined,
-          "spark.graft.components.checkpoint=reliable needs " +
-            "sc.setCheckpointDir(<fault-tolerant path>) first")
-        df.checkpoint(eager = true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.components.checkpoint: 'local' or 'reliable', got '$other'")
-    }
-  }
-
   /** (id, component) for every node appearing in `pairs`, where component
     * is the minimum node id reachable from the node. Input columns are
     * `aCol`/`bCol`; edges are treated as undirected.
+    *
+    * The result reads a lineage-truncated snapshot: materialize it
+    * before `Dedup.releaseCaches()`. After release, or after losing an
+    * executor holding a local snapshot, Spark cannot recompute it and
+    * fails with "Checkpoint block … not found".
     *
     * @param maxIter safety bound on propagation rounds (log₂ n rounds
     *                suffice with pointer jumping; 25 covers n = 2³³)
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
+    val spark = pairs.sparkSession
+    val mode = spark.conf.get("spark.graft.components.checkpoint", "local")
+    require(mode == "local" || mode == "reliable",
+      s"spark.graft.components.checkpoint: 'local' or 'reliable', got '$mode'")
+    val reliable = mode == "reliable"
+    require(!reliable || spark.sparkContext.getCheckpointDir.isDefined,
+      "spark.graft.components.checkpoint=reliable needs " +
+        "sc.setCheckpointDir(<fault-tolerant path>) first")
+    def snapshot(df: DataFrame) = Caches.checkpoint(df, reliable)
     // Materialize the pair source ONCE before fanning out — as a
     // lineage-truncating snapshot, not a bare persist: edges reference it
     // three times (two symmetric branches + the node set), and when the
@@ -77,8 +76,8 @@ object Components {
       .select(col(aCol).cast("long").as("src"))
       .unionAll(p.select(col(bCol).cast("long").as("src")))
       .distinct()
-    val edges = sym.unionAll(nodes.select(col("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Caches.persist(
+      sym.unionAll(nodes.select(col("src"), col("src").as("dst"))))
 
     var labels = snapshot(nodes.select(col("src").as("id"), col("src").as("comp")))
     var prevSum = labels.agg(sum(col("comp"))).head().getLong(0)
@@ -112,16 +111,15 @@ object Components {
         .select(col("id"),
           least(col("comp"), coalesce(col("ccomp"), col("comp"))).as("comp"))
 
-      labels = snapshot(jumped)
+      val superseded = Seq(labels, relabeled)
+      labels = snapshot(jumped) // eager: the round's inputs are dead now
+      superseded.foreach(Caches.drop)
       val s = labels.agg(sum(col("comp"))).head().getLong(0)
       converged = s == prevSum // labels only ever decrease; equal sum = fixed point
       prevSum = s
       iter += 1
     }
-    edges.unpersist(blocking = false)
-    // p is a snapshot (localCheckpoint-backed blocks, not a registered
-    // cache entry): its storage is released when the RDD is GC'd via the
-    // ContextCleaner, same as the per-round label snapshots
+    Caches.drop(edges)
     labels.withColumnRenamed("comp", "component")
   }
 
@@ -137,7 +135,8 @@ object Components {
   /** End-to-end near-dup clustering: MinHash-LSH pairs → connected
     * components. Returns (id, component) covering only docs that have at
     * least one near-duplicate (singletons are implicitly their own
-    * component and never shuffle).
+    * component and never shuffle). As with [[connectedComponents]],
+    * materialize the result before `Dedup.releaseCaches()`.
     */
   def nearDupClusters(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", threshold: Double = 0.5): DataFrame =

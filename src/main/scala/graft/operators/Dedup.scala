@@ -19,11 +19,13 @@ import graft.functions._
   */
 object Dedup {
 
-  /** Unpersist every operator-persisted intermediate since the last call
-    * (see [[Caches]] — minhash signatures, LSH candidates, k-means
-    * assignments all register there). Contract: call AFTER materializing
-    * (count/collect/write) the returned plan; unpersisting earlier just
-    * makes the job recompute signatures. Kept on Dedup for harness
+  /** Free every intermediate this thread's operators persisted or
+    * checkpointed since the last call (see [[Caches]]). Contract: call
+    * AFTER materializing (count/collect/write) the returned plan. Earlier
+    * makes the job recompute a persisted intermediate, and fails a plan
+    * that reads a checkpoint (`Components.connectedComponents`,
+    * `nearDupClusters`, KN3 at scale) with "Checkpoint block … not
+    * found", as its lineage is truncated. Kept on Dedup for harness
     * compatibility (Bench/Verify call this between queries).
     */
   // NOTE deliberately does NOT clear the Bloom filter memo: memo keys
@@ -148,9 +150,8 @@ object Dedup {
     // band-key computation (32 hash-slices per row for minhash, 56
     // combination keys for blocked simhash) runs once per execution, not
     // once per consumer. Columnar-compressed cache, ~tens of bytes per
-    // banded row; released via [[releaseCaches]] like the signatures.
-    val banded = if (scale) Caches.register(banded0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else banded0
+    // banded row.
+    val banded = if (scale) Caches.persist(banded0) else banded0
     val pruned = if (!scale) banded else {
       // sized for ~1.6 M dup-bucket keys at 10 bits/key — a 2 MB literal,
       // deliberately small: the serialized filter rides EVERY task binary
@@ -321,20 +322,14 @@ object Dedup {
     val sigs0 = docs.select(col(idCol).as("id"),
       minHashSig(col(textCol), k, shingle, seed).as("sig"))
       .filter(hasShingles(col("sig")))
-    val sigs = if (persistSignatures) {
-      val p = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Caches.register(p)
-      p
-    } else sigs0
+    val sigs = if (persistSignatures) Caches.persist(sigs0) else sigs0
 
     val scale = scaleLsh(docs)
     // scale path: persisted (consumed by the candidate-id filter build
-    // AND the verify join — one banding/self-join pass, released via
-    // releaseCaches); small corpora keep the direct single-pass plan
+    // AND the verify join — one banding/self-join pass); small corpora
+    // keep the direct single-pass plan
     val candidates0 = bandCandidates(sigs, bands, r, bucketCap, scale)
-    val candidates = if (scale) Caches.register(candidates0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else candidates0
+    val candidates = if (scale) Caches.persist(candidates0) else candidates0
 
     // fused per-pair match count (SigEqCount) — bit-identical to the
     // interpreted zip_with/aggregate fold (RegressionSpec); this runs
@@ -390,8 +385,7 @@ object Dedup {
         replay_minhash(col(textCol), shingle).as("st"))
       .filter(col("st.n_grams") > 0)
       .select(col("id"), col("st.sig").as("sig"))
-    val sigs = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.register(sigs)
+    val sigs = Caches.persist(sigs0)
     val banded = sigs.select(col("id"),
         explode(transform(sequence(lit(0), lit(bands - 1)), b =>
           struct(b.as("band"),
@@ -404,9 +398,7 @@ object Dedup {
     val scale = scaleLsh(docs)
     val cands0 = guardedBandPairs(banded, Seq("band", "bkey"), bucketCap,
       scalePath = Some(scale))
-    val cands = if (scale) Caches.register(cands0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else cands0
+    val cands = if (scale) Caches.persist(cands0) else cands0
     // fused per-pair match count (SigEqCount) — bit-identical to the
     // interpreted zip_with/aggregate fold (RegressionSpec); this runs
     // once per candidate pair, the LSH-verify hot loop
@@ -475,14 +467,12 @@ object Dedup {
     val sigs0 = docs.select(col(idCol).as("id"),
       minHashSig(col(textCol), k, shingle, seed).as("sig"))
       .filter(hasShingles(col("sig")))
-    val sigs = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.register(sigs)
+    val sigs = Caches.persist(sigs0)
     val scale = scaleLsh(docs)
     val cands0 = bandCandidates(sigs, bands, k / bands, bucketCap, scale)
     // Candidates feed two consumers (the id prune below + the verify join)
-    // — persist so banding/join runs once; released via releaseCaches.
-    val cands = cands0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.register(cands)
+    // — persist so banding/join runs once.
+    val cands = Caches.persist(cands0)
 
     // Exact shingle SETS are the expensive artifact (full arrays, not
     // 8-byte signatures) — build them only for docs that appear in a
@@ -649,9 +639,8 @@ object Dedup {
   def simHashPairsBlocked(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxHamming: Int = 3,
       blocks: Int = 8, bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val sigs = Caches.register(
-      docs.select(col(idCol).as("id"), simhash64(tokens(col(textCol))).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sigs = Caches.persist(
+      docs.select(col(idCol).as("id"), simhash64(tokens(col(textCol))).as("sh")))
     // hamming is computed and filtered BEFORE the distinct: the verify
     // is a map-side bit_count on the pair's own columns, so the dedupe
     // exchange (the one cross-process shuffle multi-JVM legs price —
@@ -749,15 +738,13 @@ object Dedup {
       // with 121, each partial aggregate allocates and merges its own
       // 16 MB filter (measured 14 s of pure filter-merge; 8.2 M keys
       // need only a handful of partials).
-      val bandedP = Caches.register(banded0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val dupKeys = Caches.register(
+      val bandedP = Caches.persist(banded0)
+      val dupKeys = Caches.persist(
         bandedP.select(col("bh"))
           .repartition(col("bh"))
           .groupBy(col("bh")).agg(count(lit(1)).as("graft_occ"))
           .filter(col("graft_occ") >= 2)
-          .select(col("bh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select(col("bh")))
       val nDup = dupKeys.count()
       val bloom = graft.operators.Bloom.nativeKeyBloomMemo(
         dupKeys.coalesce(8), col("bh"), math.max(1L, nDup),
@@ -800,8 +787,7 @@ object Dedup {
     val gh = gram_md5s(col(textCol), n)
     val base0 = Par.ensure(docs, col(idCol)).select(col(idCol).as("id"), gh.as("gh"))
       .filter(size(col("gh")) > 0)
-    val base = base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.register(base)
+    val base = Caches.persist(base0)
     val ex = base.select(col("id"), explode(col("gh")).as("h"))
     val crossDup = ex.groupBy(col("h"))
       .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
@@ -845,14 +831,13 @@ object Dedup {
   def winnowStats(docs: DataFrame, k: Int = 5, w: Int = 4,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
-    val base = Caches.register(
+    val base = Caches.persist(
       Par.ensure(docs, col(idCol))
         .select(col(idCol).as("id"),
           graft.functions.winnow_fps(col(textCol), k, w).as("st"))
         .select(col("id"), col("st.n_grams").as("n_grams"),
           col("st.fps").as("fps"))
-        .filter(col("n_grams") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("n_grams") > 0))
     winnowCrossDoc(base, idCol)
   }
 
@@ -880,14 +865,13 @@ object Dedup {
         concat(mv, lit(":"), pos.cast("string"))
       }))
     }), 1)
-    val base = Caches.register(
+    val base = Caches.persist(
       Par.ensure(docs, col(idCol)).select(col(idCol).as("id"),
           size(gh).as("n_grams"), fps.as("fps"))
         // filter on the GRAM count: a null text yields a NULL gram array,
         // which word_shingles preserves and the window fold turns into a
         // phantom [null] fingerprint list — size(fps) > 0 would keep it
-        .filter(col("n_grams") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(col("n_grams") > 0))
     winnowCrossDoc(base, idCol)
   }
 
@@ -936,15 +920,14 @@ object Dedup {
     */
   def dedupSegments(docs: DataFrame, segTokens: Int = 15,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val segs = Caches.register(
+    val segs = Caches.persist(
       Par.ensure(docs, col(idCol))
         .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
         .filter(size(col("tk")) > 0)
         .select(col("id"), posexplode(expr(
           s"transform(sequence(0, (size(tk) - 1) div $segTokens)," +
             s" i -> array_join(slice(tk, i * $segTokens + 1, $segTokens), ' '))")))
-        .toDF("id", "seg_idx", "seg")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .toDF("id", "seg_idx", "seg"))
     val fps = segs.select(col("id"), col("seg_idx"), md5(col("seg")).as("fp"))
     // Lexicographic min (id, seg_idx) as a PACKED decimal min:
     // `min(struct(...))` has a struct aggregation buffer, which
@@ -1011,8 +994,7 @@ object Dedup {
       .filter(col("st.n_tokens") > 0)
       .select(col("id"), col("st.bits").as("bits"),
         col("st.h1").as("h1"), col("st.h2").as("h2"))
-    Caches.register(
-      sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Caches.persist(sigs0)
   }
 
   /** Test hook: the fused signature path with the default columns. */

@@ -67,9 +67,8 @@ object KMeans {
     // centroid vector (sort_array on (pos, m) structs makes collect_list
     // order-insensitive), joined with the assignment population. The
     // assignment feeds two consumers (centroid agg + population count), so
-    // persist it — released by the harness via Dedup.releaseCaches.
-    val last = Caches.register(assigned
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // persist it.
+    val last = Caches.persist(assigned)
     val cents = last
       .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))

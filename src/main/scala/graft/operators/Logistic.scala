@@ -51,11 +51,10 @@ object Logistic {
       idCol: String = "doc_id"): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val quality = TextAnalysis.qualityColumns(col(textCol)).last
-    val feats = Caches.register(docs
+    val feats = Caches.persist(docs
       .select(Seq(col(idCol),
         when(quality > threshold, 1.0).otherwise(0.0).as("y")) ++
-        featureCols(col(textCol)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        featureCols(col(textCol)): _*))
     val xs = Seq("x1", "x2", "x3", "x4")
 
     def zOf(w: Array[Double]): Column =

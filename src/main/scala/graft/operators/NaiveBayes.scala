@@ -47,12 +47,11 @@ object NaiveBayes {
       explode(unigram_counts(tokens(col(textCol)))).as("u"))
     // persisted: cnt feeds totals, the vocab count, AND the weights join —
     // unpersisted, each consumer re-runs the corpus explode+aggregate
-    val cnt = Caches.register(
+    val cnt = Caches.persist(
       toks.select(col("label"), col("u.token").as("token"),
           col("u.k").as("k"))
         .groupBy(col("label"), col("token"))
-        .agg(sum(col("k")).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(sum(col("k")).as("c")))
     modelFromCounts(cnt, docs, labelCol, alpha)
   }
 
@@ -143,8 +142,7 @@ object NaiveBayes {
     // (label index, scoring join, fallback row) — persist it so the
     // corpus pays that scan once; the label-index count below
     // materializes it (guide §5: cache only reused-and-expensive)
-    val model = Model(model0.weights, Caches.register(model0.priors
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    val model = Model(model0.weights, Caches.persist(model0.priors))
     // Labels are addressed through a join-assigned dense integer index,
     // never by embedding the label VALUE in a column name (a dotted or
     // backticked label would re-parse as a nested-field path, and labels

@@ -43,14 +43,11 @@ object PageRank {
     // the edge and vertex sets feed every one of the `iters` unrolled
     // rounds (plus the count); persisted, or each round re-derives them
     // from the caller's upstream plan (for the syndication graph: a
-    // full corpus md5 pass per reuse). Harness releases via
-    // Dedup.releaseCaches like the other trainable operators.
-    val e = Caches.register(edges.select(col("src"), col("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val vs = Caches.register(
+    // full corpus md5 pass per reuse).
+    val e = Caches.persist(edges.select(col("src"), col("dst")).distinct())
+    val vs = Caches.persist(
       nodes.map(_.select(col("node")).distinct()).getOrElse(
-        e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()))
     // every reuse of e/vs below resolves columns by NAME on freshly
     // aliased projections — the rank lineage contains these plans
     // already, and dataset-tagged column references would be ambiguous
@@ -90,9 +87,8 @@ object PageRank {
       // reuse hides some of it in one JVM; the multi-JVM legs showed the
       // full shuffle-file fan-out). Persisting truncates the recurrence
       // to one execution per round (guide §5: cache reused-and-expensive;
-      // the state is (node, rank) longs, released with the other caches).
-      if (it < iters) rank = Caches.register(rank
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      // the state is (node, rank) longs).
+      if (it < iters) rank = Caches.persist(rank)
     }
     rank.select(col("node"), col("r").as("rank_fp"))
   }

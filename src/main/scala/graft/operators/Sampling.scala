@@ -259,13 +259,11 @@ object Sampling {
     // array<int> of buckets (4 B/gram) instead of the gram STRINGS the
     // declarative form staged (~15 B/gram + per-gram interpreted md5 in
     // both passes). Feeds BOTH the collected count pass and the scoring
-    // scan — persist so the shingle+digest work runs once (released by
-    // the harness via Dedup.releaseCaches).
-    val grams = Caches.register(
+    // scan — persist so the shingle+digest work runs once.
+    val grams = Caches.persist(
       Par.ensure(docs, col(idCol)).select(col(idCol).as("id"), isTarget.as("tgt"),
           gram_buckets(col(textCol), 2).as("bk"))
-        .filter(size(col("bk")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .filter(size(col("bk")) > 0))
     val counts = grams.select(col("tgt"), explode(col("bk")).as("b"))
       .groupBy(col("b"))
       .agg(count(lit(1)).as("cq"),

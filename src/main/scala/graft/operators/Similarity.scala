@@ -426,8 +426,7 @@ object Similarity {
     // multiple of the derived step yields no centroids and assign()
     // throws its loud empty-set error (callers choose slices that keep
     // id 0 / stride points, as ann_ivf_append does).
-    val cents = Caches.register(centroids(old, nlist, vecCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cents = Caches.persist(centroids(old, nlist, vecCol, idCol))
     val nOld = assign(old, cents, vecCol, idCol, "o", top = 1)
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n_old"))
     val nNew = assign(fresh, cents, vecCol, idCol, "n", top = 1)

@@ -130,10 +130,8 @@ object Snapshot {
       // persisted: the op-domain check below is an eager job, and the
       // returned plan reads `latest` twice more (keys + upserts) — without
       // a cache the changeset pipeline (incl. the seqCol window) would
-      // re-run three times. Released by the harness via
-      // Dedup.releaseCaches, like the other operator intermediates.
-      val cached = Caches.register(latest0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      // re-run three times.
+      val cached = Caches.persist(latest0)
       // fail loudly on ops outside the domain — a typo'd 'UPSERT'/'update'
       // would otherwise remove the base row and insert nothing, silently
       // acting as a delete

@@ -470,11 +470,10 @@ object TextAnalysis {
     // same round-6-absorbed latitude the bigram family documents), and
     // the per-doc aggregate's map-side partials collapse to one row per
     // doc. Both model scalars come from ONE tiny aggregate over cnt.
-    val dtf = Caches.register(
+    val dtf = Caches.persist(
       docs.select(col(idCol),
           explode(unigram_counts(tokens(col(textCol)))).as("u"))
-        .select(col(idCol), col("u.token").as("token"), col("u.k").as("k"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col(idCol), col("u.token").as("token"), col("u.k").as("k")))
     val cnt = dtf.groupBy(col("token")).agg(sum(col("k")).as("c"))
     val scalars = cnt.agg(count(lit(1)), coalesce(sum(col("c")), lit(0L))).head()
     val vocab = scalars.getLong(0)
@@ -512,9 +511,7 @@ object TextAnalysis {
     */
   def bigramPerplexity(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", lambda: Double = 0.7): DataFrame = {
-    val tk = Caches.register(
-      docs.select(col(idCol), tokens(col(textCol)).as("tk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tk = Caches.persist(docs.select(col(idCol), tokens(col(textCol)).as("tk")))
     // doc-local counts from the fused kernel: the bigram hash-agg sees
     // map-side-collapsed rows, and scoring attaches the model to bigram
     // TYPES weighted by k instead of re-shuffling the full occurrence
@@ -642,18 +639,15 @@ object TextAnalysis {
     // the raw-stream exchange costs more than the partial-agg hashmaps
     // save (unlike the r12 dup-key count, whose aggregate WAS the
     // spiller). Measured negative result; the plain shape stays.
-    val cb = Caches.register(
-      bi.groupBy(col("prev"), col("cur")).agg(sum(col("k")).as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cb = Caches.persist(
+      bi.groupBy(col("prev"), col("cur")).agg(sum(col("k")).as("cb")))
     val ccont = cb.groupBy(col("cur")).agg(count(lit(1)).as("n1bwd"))
     (cb, ccont, cb.count()) // count = N1+(·,·), the one driver scalar
   }
 
   def kneserNeyPerplexity(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", discount: Double = 0.75): DataFrame = {
-    val tk = Caches.register(
-      docs.select(col(idCol), tokens(col(textCol)).as("tk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tk = Caches.persist(docs.select(col(idCol), tokens(col(textCol)).as("tk")))
     // doc-local counts (fused kernel) + model attached to bigram TYPES:
     // see bigramPerplexity for the shuffle-shape rationale
     val bi = tk.filter(size(col("tk")) >= 2)
@@ -711,12 +705,15 @@ object TextAnalysis {
     * the occurrence stream never re-exchanges across model keys; one
     * scalar (N1+(·,·)) to the driver. Docs with < 3 tokens keep NULL
     * scores.
+    *
+    * On the size-gated scale path the model reads two local checkpoints:
+    * materialize the result before `Dedup.releaseCaches()`. After release,
+    * or after losing an executor holding their blocks, Spark cannot
+    * recompute it and fails with "Checkpoint block … not found".
     */
   def kneserNeyTrigramPerplexity(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", discount: Double = 0.75): DataFrame = {
-    val tk = Caches.register(
-      docs.select(col(idCol), tokens(col(textCol)).as("tk"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tk = Caches.persist(docs.select(col(idCol), tokens(col(textCol)).as("tk")))
     // doc-local trigram counts from the fused kernel — the trigram
     // hash-agg sees map-side-collapsed rows, and scoring joins the
     // model to trigram TYPES weighted by k, so the occurrence stream is
@@ -762,10 +759,9 @@ object TextAnalysis {
     // prototype found. A localCheckpoint materializes to a LogicalRDD
     // that CARRIES the physical plan's HashPartitioning(v), so the
     // ladder aggregates/joins satisfy their distributions without new
-    // exchanges. Storage is row-level MEMORY_AND_DISK blocks (released
-    // when the RDD is GC'd, same contract as Components' snapshots);
-    // the fixture path keeps the columnar persist and its byte-identical
-    // r12/r13 plans.
+    // exchanges. Storage is row-level MEMORY_AND_DISK blocks, owned by
+    // Caches like every other intermediate here; the fixture path keeps
+    // the columnar persist and its byte-identical r12/r13 plans.
     // Why the checkpointed subtrees plan with AQE OFF: LogicalRDD takes
     // its partitioning from the source Dataset's
     // executedPlan.outputPartitioning, and AdaptiveSparkPlanExec never
@@ -785,16 +781,15 @@ object TextAnalysis {
     val vParts = sess.sessionState.conf.numShufflePartitions
     val (c3, chatOpt) =
       if (!scaleGate0)
-        (Caches.register(c3base
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-          None)
+        (Caches.persist(c3base), None)
       else {
         val noAqe = Shims.cloneSession(sess,
           Seq("spark.sql.adaptive.enabled" -> "false"))
-        val c3ck = Shims.ofRows(noAqe, c3base.queryExecution.logical)
-          .repartition(vParts, col("v")).localCheckpoint()
-        val chatCk = c3ck.groupBy(col("v"), col("w"))
-          .agg(count(lit(1)).as("chat")).localCheckpoint()
+        val c3ck = Caches.checkpoint(
+          Shims.ofRows(noAqe, c3base.queryExecution.logical)
+            .repartition(vParts, col("v")))
+        val chatCk = Caches.checkpoint(c3ck.groupBy(col("v"), col("w"))
+          .agg(count(lit(1)).as("chat")))
         def rebind(ck: DataFrame) = Shims.ofRows(sess, ck.queryExecution.logical)
         (rebind(c3ck), Some(rebind(chatCk)))
       }
@@ -802,9 +797,8 @@ object TextAnalysis {
       .agg(sum(col("c3")).as("cv3"), count(lit(1)).as("n1f3"))
     // continuation counts: c3 rows are distinct (u,v,w), so count(*)
     // per (v,w) IS |{u : c(u,v,w) > 0}|
-    val chat = chatOpt.getOrElse(Caches.register(
-      c3.groupBy(col("v"), col("w")).agg(count(lit(1)).as("chat"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    val chat = chatOpt.getOrElse(Caches.persist(
+      c3.groupBy(col("v"), col("w")).agg(count(lit(1)).as("chat"))))
     val cctx2 = chat.groupBy(col("v"))
       .agg(sum(col("chat")).as("cv2"), count(lit(1)).as("n1f2"))
     // bottom level over bigram TYPES of the same corpus — the SAME
@@ -986,10 +980,9 @@ object TextAnalysis {
       langCol: String = "lang", textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val quality = qualityColumns(col(textCol)).last
-    val base = Caches.register(docs.select(col(domainCol), col(langCol),
+    val base = Caches.persist(docs.select(col(domainCol), col(langCol),
         wsTokenCount(col(textCol)).as("n_tokens"), quality.as("q"),
-        fingerprint(col(textCol)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        fingerprint(col(textCol)).as("fp")))
     val agg = base.groupBy(col(domainCol)).agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_tokens")).as("total_tokens"),

@@ -24,6 +24,37 @@ class ComponentsSpec extends SparkSuite {
     assert(labels.size == 64 && labels.values.forall(_ == 0L))
   }
 
+  test("finished rounds free their snapshots before release") {
+    // of the RDDs a 64-node chain run persists or checkpoints, only the
+    // pair snapshot and the final labels may still hold blocks; every
+    // superseded round's snapshots are dropped as the run goes.
+    // getPersistentRDDs holds its RDDs weakly, so a GC could hide a
+    // snapshot the run forgot: a poller keeps every RDD it sees reachable.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() => {
+      while (!stop.get()) {
+        sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before(id)) seen.putIfAbsent(id, rdd)
+        }
+        Thread.sleep(1)
+      }
+    })
+    poller.start()
+    val labels = try Components.connectedComponents(
+      (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    finally { stop.set(true); poller.join() }
+    try {
+      assert(labels.count() == 64)
+      assert(seen.size > 2, s"the poller saw only ${seen.keySet}")
+      val held = sc.getPersistentRDDs.keySet -- before
+      assert(held.size <= 2,
+        s"expected the pair snapshot and the final labels, held $held")
+    } finally graft.operators.Dedup.releaseCaches()
+  }
+
   test("bridged stars merge through a single edge") {
     // two stars centered at 100 and 200, bridged by (5, 205)
     val edges = (101L to 105L).map((100L, _)) ++

@@ -729,15 +729,40 @@ class RegressionSpec extends SparkSuite {
   }
 
   test("releaseCaches unpersists minhash signature cache") {
+    // For each operator call: the exact RDD ids it persisted or
+    // checkpointed (the keys it added to getPersistentRDDs) must all be
+    // gone after release. A global count is flaky in a full-suite run
+    // (see ConcurrencySpec). The result stays referenced until the poll
+    // ends, so GC cannot free a snapshot that release missed.
+    val sc = spark.sparkContext
+    def assertReleased(what: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run
+      out.count()
+      val made = sc.getPersistentRDDs.keySet -- before
+      assert(made.nonEmpty, s"$what persisted nothing")
+      Dedup.releaseCaches()
+      // allow async unpersist to settle
+      val deadline = System.currentTimeMillis() + 10000
+      def left = made intersect sc.getPersistentRDDs.keySet
+      while (left.nonEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(left.isEmpty, s"$what: RDDs $left leaked after releaseCaches (of $made)")
+      assert(out.columns.nonEmpty)
+    }
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon eta")).toDF("doc_id", "text")
-    Dedup.minHashPairs(docs, threshold = 0.9).count()
-    Dedup.releaseCaches()
-    // allow async unpersist to settle
-    val deadline = System.currentTimeMillis() + 10000
-    def cachedTables() = spark.sparkContext.getPersistentRDDs.size
-    while (cachedTables() > 0 && System.currentTimeMillis() < deadline)
-      Thread.sleep(100)
-    assert(cachedTables() == 0, "persisted RDDs leaked after releaseCaches")
+    assertReleased("minHashPairs")(Dedup.minHashPairs(docs, threshold = 0.9))
+    assertReleased("connectedComponents") {
+      graft.operators.Components.connectedComponents(
+        (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    }
+    // forced scale gate: the model reads two local checkpoints
+    val gate = "spark.graft.scalePath.minInputBytes"
+    spark.conf.set(gate, "0")
+    try assertReleased("kneserNeyTrigramPerplexity") {
+      graft.operators.TextAnalysis.kneserNeyTrigramPerplexity(docs)
+    } finally spark.conf.unset(gate)
+    assertReleased("Bpe.train")(graft.operators.Bpe.train(docs, merges = 4))
   }
 }
