@@ -1,11 +1,9 @@
 package graft
 
-import scala.collection.mutable
-
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.status.api.v1.{StageData, StageStatus}
 
 /** Execution counters credited to one bench sample. */
 private[graft] final case class SampleStats(jobs: Long = 0, stages: Long = 0,
@@ -13,70 +11,57 @@ private[graft] final case class SampleStats(jobs: Long = 0, stages: Long = 0,
     memorySpillBytes: Long = 0, diskSpillBytes: Long = 0,
     executorRunMs: Long = 0, gcMs: Long = 0)
 
-/** The bench's one listener: credits jobs, stages and task metrics to the
-  * sample whose tag ([[SampleRecorder.Key]], a local property) the job
-  * was submitted under. A job start carries its thread's properties and
-  * its stage ids, so each stage maps to its sample's tag and every task
-  * end is credited there — however late the async bus delivers it, and
-  * never to a job of another thread or an untagged one.
+/** A sample's counters, read from Spark's status store: the always-on
+  * `AppStatusListener` (UI or not) keeps per-job and per-stage-attempt
+  * totals there. A sample's jobs are the ones submitted under its job
+  * tag; the AQE and broadcast jobs its query spawns inherit the tag with
+  * the thread's local properties, and no job of another thread or an
+  * untagged one carries it.
   */
-private[graft] final class SampleRecorder extends SparkListener {
-  private val stageTag = mutable.Map[Int, String]()
-  private val byTag = mutable.Map[String, SampleStats]()
-
-  private def credit(tag: String)(f: SampleStats => SampleStats): Unit =
-    byTag(tag) = f(byTag.getOrElse(tag, SampleStats()))
-
-  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    Option(e.properties).flatMap(p => Option(p.getProperty(SampleRecorder.Key)))
-      .foreach { tag =>
-        e.stageInfos.foreach(s => stageTag(s.stageId) = tag)
-        credit(tag)(s => s.copy(jobs = s.jobs + 1))
-      }
-  }
-
-  // skipped stages (map outputs already computed) never complete, so
-  // only the stages a sample actually ran are counted
-  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-    synchronized {
-      stageTag.get(e.stageInfo.stageId)
-        .foreach(credit(_)(s => s.copy(stages = s.stages + 1)))
-    }
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    stageTag.get(e.stageId).foreach(credit(_) { s =>
-      val m = e.taskMetrics
-      if (m == null) s.copy(tasks = s.tasks + 1)
-      else s.copy(tasks = s.tasks + 1,
-        shuffleReadBytes = s.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
-        shuffleWriteBytes = s.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
-        memorySpillBytes = s.memorySpillBytes + m.memoryBytesSpilled,
-        diskSpillBytes = s.diskSpillBytes + m.diskBytesSpilled,
-        executorRunMs = s.executorRunMs + m.executorRunTime,
-        gcMs = s.gcMs + m.jvmGCTime)
-    })
-  }
-
-  /** Tags with credited work that [[take]] has not yet collected. */
-  def tags: Set[String] = synchronized(byTag.keySet.toSet)
-
-  /** Everything credited to `tag`, which is then forgotten. Events ride
-    * the async listener bus: drain it first
-    * (`Shims.drainListenerBus`) or late task ends are missed.
-    */
-  def take(tag: String): SampleStats = synchronized {
-    stageTag.filterInPlace((_, t) => t != tag)
-    byTag.remove(tag).getOrElse(SampleStats())
-  }
-}
-
-private[graft] object SampleRecorder {
-  val Key = "graft.bench.sample"
-
-  /** Runs `body` with `tag` as this thread's [[Key]] local property. */
+private[graft] object SampleStats {
+  /** Runs `body` with `tag` added to this thread's job tags. */
   def tagged[T](sc: SparkContext, tag: String)(body: => T): T = {
-    sc.setLocalProperty(Key, tag)
-    try body finally sc.setLocalProperty(Key, null)
+    sc.addJobTag(tag)
+    try body finally sc.removeJobTag(tag)
+  }
+
+  /** The highest job id the status store holds, -1 when it holds none:
+    * taken before a sample, it is that sample's [[read]] `since`. */
+  def lastJob(sc: SparkContext): Int =
+    Shims.jobs(sc).map(_.jobId).maxOption.getOrElse(-1)
+
+  /** Everything the jobs tagged `tag` ran: the attempts of their stages
+    * that completed or failed (skipped stages never ran). The store is
+    * fed by the async listener bus: drain it first
+    * (`Shims.drainListenerBus`). Left when the store has evicted
+    * (`spark.ui.retainedJobs` / `retainedStages`) a job after `since` or
+    * a stage attempt a tagged job ran, whose work would read as zero.
+    */
+  def read(sc: SparkContext, tag: String, since: Int): Either[String, SampleStats] = {
+    val held = Shims.jobs(sc)
+    val ids = held.map(_.jobId).toSet
+    // job ids are consecutive, so one the store lacks was evicted
+    val lostJobs = (since + 1 to ids.maxOption.getOrElse(since)).filterNot(ids)
+    val jobs = held.filter(_.jobTags.contains(tag))
+    val ran = jobs.flatMap(_.stageIds).distinct
+      .flatMap(Shims.stageAttempts(sc, _))
+      .filter(a => a.status == StageStatus.COMPLETE || a.status == StageStatus.FAILED)
+    // the store evicts skipped stages first (never completed, they sort
+    // oldest), which loses nothing; a job that no longer finds every
+    // attempt it completed or failed has lost work
+    val short = jobs.filter(j => ran.count(a => j.stageIds.contains(a.stageId)) <
+      j.numCompletedStages + j.numFailedStages).map(_.jobId)
+    if (lostJobs.nonEmpty || short.nonEmpty)
+      Left(s"status store evicted jobs [${lostJobs.mkString(",")}] and " +
+        s"stages of jobs [${short.mkString(",")}]")
+    else {
+      def sum(f: StageData => Long) = ran.map(f).sum
+      Right(SampleStats(jobs.size, ran.size,
+        sum(a => a.numCompleteTasks + a.numFailedTasks + a.numKilledTasks),
+        sum(_.shuffleReadBytes), sum(_.shuffleWriteBytes),
+        sum(_.memoryBytesSpilled), sum(_.diskBytesSpilled),
+        sum(_.executorRunTime), sum(_.jvmGcTime)))
+    }
   }
 }
 
@@ -84,7 +69,8 @@ private[graft] object SampleRecorder {
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query wall-clock,
   * and per query a `layers` record of its last scored sample: construct
   * / plan / exec seconds and the jobs, stages, tasks, shuffle bytes,
-  * executor run time and GC time the [[SampleRecorder]] credited to it,
+  * executor run time and GC time Spark's status store holds for its
+  * tagged jobs ([[SampleStats]]),
   * and the generated classes it compiled (`codegen_compiles`, also
   * totalled over the leg).
   * `SPARK_GRAFT_ONLY=<q>[,<q>...]` profiles a subset the same way.
@@ -414,13 +400,6 @@ object Bench {
     // rides in the JSON as `samples_policy` so cross-leg comparisons can
     // see which convention produced each record.
     val discardFirst = fixtureBytes >= (1L << 30)
-    // Per-sample execution counters (jobs, stages, tasks, shuffle bytes,
-    // spill, executor run and GC time), credited by sample tag — spill_mb
-    // per query is its samples' memory/disk spill, which counts the
-    // serialized shuffle writer's ordinary sort-buffer writes (the engine
-    // sets bypassMergeThreshold=0): `spill_semantics` says so.
-    val recorder = new SampleRecorder
-    spark.sparkContext.addSparkListener(recorder)
     // Shuffle-file DRAIN between samples (r12 verdict: graph_pagerank
     // rose monotonically 11.9→37.9 s across samples under local-cluster,
     // unexplained). Root cause: in multi-JVM mode executors are separate
@@ -504,12 +483,13 @@ object Bench {
         // the compile count is JVM-global: Bench runs one sample at a
         // time, so the delta over the sample is the sample's own
         val cg0 = codegenCompiles()
+        val since = SampleStats.lastJob(spark.sparkContext)
         // construct = the query function, plan = analyze + optimize +
         // physical planning (forced here; toRdd would force it anyway),
         // exec = AQE round-trips, scheduling and compute
         val t0 = System.nanoTime()
         var t1 = t0; var t2 = t0; var t3 = t0
-        val ok = SampleRecorder.tagged(spark.sparkContext, tag) {
+        val ok = SampleStats.tagged(spark.sparkContext, tag) {
           try {
             val df = fn(spark, sfDir)
             t1 = System.nanoTime()
@@ -526,15 +506,25 @@ object Bench {
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
         // outside the timed window: deliver the sample's pending listener
-        // events, then collect what they credited to its tag
-        org.apache.spark.sql.graft.Shims.drainListenerBus(
-          spark.sparkContext, 10000L)
-        val stats = recorder.take(tag)
+        // events to the status store, then read its tagged jobs' counters
+        // (jobs, stages, tasks, shuffle bytes, spill, executor run and GC
+        // time). spill_mb per query is its samples' memory/disk spill,
+        // which counts the serialized shuffle writer's ordinary sort-buffer
+        // writes (the engine sets bypassMergeThreshold=0): `spill_semantics`
+        // says so.
+        Shims.drainListenerBus(spark.sparkContext, 10000L)
+        val stats = SampleStats.read(spark.sparkContext, tag, since)
         val sampleCompiles = codegenCompiles() - cg0
-        spillMem += stats.memorySpillBytes; spillDisk += stats.diskSpillBytes
         compiles += sampleCompiles
-        if (ok) layers = layersJson((t1 - t0) / 1e9, (t2 - t1) / 1e9,
-          (t3 - t2) / 1e9, stats, sampleCompiles)
+        stats match {
+          case Right(s) =>
+            spillMem += s.memorySpillBytes; spillDisk += s.diskSpillBytes
+            if (ok) layers = layersJson((t1 - t0) / 1e9, (t2 - t1) / 1e9,
+              (t3 - t2) / 1e9, s, sampleCompiles)
+          case Left(err) =>
+            System.err.println(s"bench: $name layers of $tag lost: $err")
+            if (ok) layers = ""
+        }
         graft.operators.Dedup.releaseCaches()
         // Shuffle-file hygiene at data scale (≥1 GiB fixtures, same
         // threshold as discard_first): a completed job's shuffle files

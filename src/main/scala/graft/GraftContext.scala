@@ -10,7 +10,6 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayDeque
-import scala.concurrent.{ExecutionContext, Future}
 import scala.util.control.NonFatal
 
 /** User-facing context with the reference's `BlazingContext` surface
@@ -466,11 +465,6 @@ class GraftContext(val spark: SparkSession) {
     val resolved = resolveOptions(configOptions) // validate BEFORE cloning
     Shims.cloneSession(spark, resolved.map { case (_, k, v) => k -> v }).sql(query)
   }
-
-  /** Async submission: the reference's sql(..., return_token=True) +
-    * status/fetch (context.py:3071-3344). */
-  def sqlAsync(query: String)(implicit ec: ExecutionContext): Future[DataFrame] =
-    Future(spark.sql(query))
 
   // ---- token polling surface (context.py:3071-3344) ----------------------
   // The reference's sql(..., return_token=True) returns a token the client

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -67,9 +67,6 @@ object Bpe {
       st => when(st.getField("carry").isNull, st.getField("out"))
         .otherwise(concat(st.getField("out"), array(st.getField("carry")))))
 
-  /** Learn `merges` BPE merge rules from a document corpus. Returns one row
-    * per rule: (merge_round, lsym, rsym, cnt) in learning order.
-    */
   /** Word-frequency table with initial symbol sequences (chars + `</w>`):
     * the corpus's only appearance in BPE — everything downstream works on
     * this (distinct-word-sized) table.
@@ -80,54 +77,14 @@ object Bpe {
       .select(col("word"), col("freq"),
         concat(split(col("word"), ""), array(lit("</w>"))).as("syms"))
 
+  /** Strict Sennrich training: learn `merges` BPE merge rules from a
+    * document corpus, one rule per pass ([[trainBatched]] with a batch of
+    * one). Returns one row per rule: (merge_round, lsym, rsym, cnt) in
+    * learning order.
+    */
   def train(docs: DataFrame, merges: Int = 4,
-      textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vocab = Caches.persist(this.vocab(docs, textCol))
-    var cur = vocab
-    val learned = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    // each round's rewritten vocab is persisted so round r+1's pair count
-    // evaluates ONE applyMerge fold over cached rows — an unpersisted
-    // chain re-runs every previous round's interpreted fold per round
-    // (O(merges²) work, unbounded expression tree). `older` (two rounds
-    // back) is dropped only after the collect has materialized the round
-    // that read it.
-    var older: DataFrame = null
-    var round = 1
-    var exhausted = false
-    while (round <= merges && !exhausted) {
-      val bestRows = cur
-        // single-symbol words carry no pairs — and sequence(1, 0) is
-        // DESCENDING in Spark ([1,0] → syms[1] out-of-bounds), so they
-        // must be filtered out, not handed to the transform
-        .filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(syms) - 1)," +
-            " i -> struct(syms[i-1] AS l, syms[i] AS r))")).as("p"))
-        .groupBy(col("p.l").as("lsym"), col("p.r").as("rsym"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("lsym"), col("rsym"))
-        .limit(1).collect()
-      if (older != null) { Caches.drop(older); older = null }
-      if (bestRows.isEmpty) {
-        // no adjacent pairs anywhere (empty/all-null corpus, or every
-        // word already collapsed to a single symbol): stop with the
-        // merges learned so far instead of indexing an empty result
-        exhausted = true
-      } else {
-        val best: Row = bestRows(0)
-        val (l, r, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
-        learned += ((round, l, r, cnt))
-        val next = Caches.persist(cur.select(col("word"), col("freq"),
-            applyMerge(col("syms"), l, r).as("syms")))
-        if (!(cur eq vocab)) older = cur
-        cur = next
-      }
-      round += 1
-    }
-    learned.toSeq.toDF("merge_round", "lsym", "rsym", "cnt")
-  }
+      textCol: String = "text"): DataFrame =
+    trainBatched(docs, merges, batch = 1, candidateFactor = 1, textCol)
 
   /** Batched BPE training — the production-scale variant of [[train]].
     *
@@ -148,7 +105,7 @@ object Bpe {
     * a pair whose count would RISE from an earlier merge in the same
     * pass (it contains that merge's output) is deferred to the next
     * pass, where strict BPE might rank it earlier. This is the standard
-    * parallel-BPE tradeoff; batch=1 reproduces [[train]] exactly.
+    * parallel-BPE tradeoff; batch=1 is strict Sennrich ([[train]]).
     *
     * Runs ceil(merges/batch) passes (driver rounds drop by the batch
     * factor) and trims to `merges` rules; a pathological corpus whose
@@ -158,11 +115,17 @@ object Bpe {
     */
   def trainBatched(docs: DataFrame, merges: Int = 64, batch: Int = 16,
       candidateFactor: Int = 8, textCol: String = "text"): DataFrame = {
-    require(merges >= 1 && batch >= 1 && candidateFactor >= 1)
+    require(merges >= 0 && batch >= 1 && candidateFactor >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
     val vocab = Caches.persist(this.vocab(docs, textCol))
     var cur = vocab
+    // each pass's rewritten vocab is persisted so the next pass's pair
+    // count evaluates ONE applyMerges fold over cached rows — an
+    // unpersisted chain re-runs every previous pass's interpreted fold per
+    // pass (O(passes²) work, unbounded expression tree). `older` (two
+    // passes back) is dropped only after the collect has materialized the
+    // pass that read it.
     var older: DataFrame = null
     val learned = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     val passes = (merges + batch - 1) / batch
@@ -171,6 +134,9 @@ object Bpe {
     while (pass < passes && !exhausted && learned.size < merges) {
       val want = math.min(batch, merges - learned.size)
       val cands = cur
+        // single-symbol words carry no pairs — and sequence(1, 0) is
+        // DESCENDING in Spark ([1,0] → syms[1] out-of-bounds), so they
+        // must be filtered out, not handed to the transform
         .filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
           "transform(sequence(1, size(syms) - 1)," +
@@ -181,6 +147,9 @@ object Bpe {
         .limit(batch * candidateFactor)
         .collect()
       if (older != null) { Caches.drop(older); older = null }
+      // no adjacent pairs anywhere (empty/all-null corpus, or every word
+      // already collapsed to a single symbol): stop with the merges
+      // learned so far
       if (cands.isEmpty) exhausted = true
       else {
         val used = scala.collection.mutable.Set.empty[String]

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -31,7 +32,17 @@ private[graft] object Caches {
   private final class Entry(val df: DataFrame, ckRdd: RDD[_]) {
     def persisted = ckRdd == null
     def free(blocking: Boolean): Unit =
-      if (persisted) df.unpersist(blocking) else ckRdd.unpersist(blocking)
+      if (persisted) df.unpersist(blocking)
+      else {
+        ckRdd.unpersist(blocking)
+        // a reliable snapshot's files outlive its RDD: Spark deletes them
+        // only under spark.cleaner.referenceTracking.cleanCheckpoints
+        ckRdd.getCheckpointFile.foreach { f =>
+          val path = new Path(f)
+          path.getFileSystem(ckRdd.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
+      }
   }
 
   private val local =
@@ -53,9 +64,10 @@ private[graft] object Caches {
 
   /** An eager, lineage-truncating snapshot of `df`: executor blocks, or
     * files under `sc.setCheckpointDir` (which survive executor loss) when
-    * `reliable`. Its RDD is recorded now, so [[release]] walks no plan.
-    * Once released, a plan reading the snapshot cannot recompute it:
-    * Spark fails with "Checkpoint block … not found". */
+    * `reliable`. Its RDD is recorded now, so [[release]] walks no plan,
+    * and frees its blocks and deletes its files. Once released, a plan
+    * reading the snapshot cannot recompute it: Spark fails with
+    * "Checkpoint block … not found" (or a missing checkpoint file). */
   def checkpoint(df: DataFrame, reliable: Boolean = false): DataFrame = {
     val ck = if (reliable) df.checkpoint(eager = true)
       else df.localCheckpoint(eager = true)

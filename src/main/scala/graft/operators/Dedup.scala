@@ -310,7 +310,6 @@ object Dedup {
   def minHashPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 128, bands: Int = 32,
       shingle: Int = 3, threshold: Double = 0.5, seed: Long = 42L,
-      persistSignatures: Boolean = true,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val r = k / bands
@@ -318,11 +317,9 @@ object Dedup {
     // Signature pass is the dominant compute (O(shingles*k) per doc); it
     // feeds three consumers (two self-join sides + the verify join), so
     // persist it — ~k*8 bytes/doc, MEMORY_AND_DISK-safe at any scale.
-    // Callers pipelining over >memory corpora can opt out and recompute.
-    val sigs0 = docs.select(col(idCol).as("id"),
+    val sigs = Caches.persist(docs.select(col(idCol).as("id"),
       minHashSig(col(textCol), k, shingle, seed).as("sig"))
-      .filter(hasShingles(col("sig")))
-    val sigs = if (persistSignatures) Caches.persist(sigs0) else sigs0
+      .filter(hasShingles(col("sig"))))
 
     val scale = scaleLsh(docs)
     // scale path: persisted (consumed by the candidate-id filter build

@@ -76,12 +76,6 @@ object Relational {
     if (n <= maxRows) broadcast(df) else df
   }
 
-  /** Serialized native Bloom filters by [[graft.PlanMemo]] key — same
-    * lifecycle and staleness contract as [[probeMemo]]; entries are a
-    * few MB each, so the leak guard trips earlier. */
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), Array[Byte]]()
-
   /** Bloom-prune `fact` rows whose `factKey` has no candidate in
     * `keys(keyCol)` BEFORE the join's exchange — the explicit form of the
     * optimizer's runtime filter, for the joins whose creation side it
@@ -92,38 +86,26 @@ object Relational {
     * fact table and shuffling the percent of it that can match.
     *
     * Cost model: one count job + one aggregate job over `keys`, paid
-    * EAGERLY at first plan construction per session (both memoised, like
-    * [[dimCounted]]'s probe) — so repeated executions of the same query
-    * amortize the build jobs out entirely, and bench samples after the
-    * first never include them. The filter bytes (10 bits/key, ≤32 MB —
-    * [[graft.operators.Bloom.nativeKeyBloom]] raises Spark's 8 MB
-    * runtime-bloomFilter conf cap to honor that sizing) ride the task
-    * binary's stage-level broadcast.
+    * EAGERLY at first plan construction per session (the count memoised
+    * like [[dimCounted]]'s probe, the filter by
+    * [[graft.operators.Bloom.nativeKeyBloomMemo]]) — so repeated
+    * executions of the same query amortize the build jobs out entirely,
+    * and bench samples after the first never include them. The filter
+    * bytes (10 bits/key, ≤32 MB — [[graft.operators.Bloom.nativeKeyBloom]]
+    * raises Spark's 8 MB runtime-bloomFilter conf cap to honor that
+    * sizing) ride the task binary's stage-level broadcast.
     */
   private def bloomSemi(fact: DataFrame, factKey: Column,
       keys: DataFrame, keyCol: Column): DataFrame = {
-    if (bloomMemo.size > 64) bloomMemo.clear()
-    def build(memoKey: Option[(Int, String)]): Array[Byte] = {
-      val n = memoKey match {
-        case Some(k) => probeMemo.computeIfAbsent(k, _ => keys.count()).longValue()
-        case None    => keys.count()
-      }
-      val b = graft.operators.Bloom.nativeKeyBloom(
-        keys, keyCol, n, math.min(n * 10L, 1L << 28))
-      // empty build side → null filter; ConcurrentHashMap drops null
-      // mappings, so memoize the empty-array sentinel (nativePruned
-      // translates both to a foldable false) and the empty case caches
-      // like the non-empty one instead of re-running the probe jobs.
-      if (b == null) Array.emptyByteArray else b
+    // a plan PlanMemo cannot key (in-memory relations, overwritten files)
+    // pays its count, and its filter build, at every plan construction
+    val n = graft.PlanMemo.keyOf(keys) match {
+      case Some(k) => probeMemo.computeIfAbsent(k, _ => keys.count()).longValue()
+      case None    => keys.count()
     }
-    // PlanMemo refuses plans whose key cannot pin their data (in-memory
-    // relations, overwritten files) — those rebuild the filter at every
-    // plan construction rather than risk pruning through a stale one.
-    val bytes = graft.PlanMemo.keyOf(keys) match {
-      case None          => build(None)
-      case k @ Some(key) => bloomMemo.computeIfAbsent(key, _ => build(k))
-    }
-    graft.operators.Bloom.nativePruned(fact, factKey, bytes)
+    graft.operators.Bloom.nativePruned(fact, factKey,
+      graft.operators.Bloom.nativeKeyBloomMemo(
+        keys, keyCol, n, math.min(n * 10L, 1L << 28)))
   }
 
   /** Derived-partsupp CTE, DuckDB dialect. The fixtures omit partsupp

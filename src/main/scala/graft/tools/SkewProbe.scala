@@ -99,8 +99,8 @@ object SkewProbe {
       if (sys.env.contains("SPARK_GRAFT_DEBUG_PLAN"))
         System.err.println(s"=== $name executed plan ===\n" +
           fing.queryExecution.executedPlan.toString.take(8000))
-      // listener delivery is async; drain after a short settle
-      Thread.sleep(500)
+      // listener delivery is async: wait until every task end is delivered
+      org.apache.spark.sql.graft.Shims.drainListenerBus(spark.sparkContext, 10000L)
       import scala.jdk.CollectionConverters._
       val byStage = durations.asScala.toArray
       val ms = byStage.map(_._2).sorted

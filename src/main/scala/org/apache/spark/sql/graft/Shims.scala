@@ -7,13 +7,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.status.api.v1.{JobData, StageData}
 import org.apache.spark.util.ThreadUtils
 
 /** Bridge to `private[sql]` Column↔Expression and plan↔Dataset conversions
   * (Spark 4.x moved Column onto ColumnNode; classic sessions convert via
   * ExpressionUtils), to session cloning, to thread-local capture for
-  * background queries and to the `private[spark]` listener bus. This is
-  * the only place the library reaches into Spark internals.
+  * background queries and to the `private[spark]` listener bus and status
+  * store. This is the only place the library reaches into Spark internals.
   */
 object Shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -55,4 +56,14 @@ object Shims {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** Every job Spark's status store holds. The store is kept by the
+    * always-on `AppStatusListener`, UI or not, and evicts the oldest
+    * finished jobs past `spark.ui.retainedJobs`. */
+  def jobs(sc: SparkContext): Seq[JobData] = sc.statusStore.jobsList(null)
+
+  /** Every attempt of stage `stageId` the status store holds: none once
+    * `spark.ui.retainedStages` has evicted the stage. */
+  def stageAttempts(sc: SparkContext, stageId: Int): Seq[StageData] =
+    sc.statusStore.stageData(stageId)
 }

@@ -16,8 +16,9 @@ object BenchRecorderSpec {
   val release = new CountDownLatch(1)
 }
 
-/** Bench's [[SampleRecorder]]: work is credited to the sample whose tag
-  * its job was submitted under — all of it, and nothing else.
+/** Bench's per-sample layers, read from Spark's status store by
+  * [[SampleStats.read]]: work is credited to the sample whose job tag
+  * its jobs were submitted under — all of it, and nothing else.
   */
 class BenchRecorderSpec extends SparkSuite {
   import BenchRecorderSpec._
@@ -32,28 +33,30 @@ class BenchRecorderSpec extends SparkSuite {
     spark.range(0, 20000, 1, 4).groupBy((col("id") % 7).as("k")).count()
       .queryExecution.toRdd.count()
 
-  private def withRecorder[T](body: SampleRecorder => T): T = {
-    val r = new SampleRecorder
-    sc.addSparkListener(r)
-    try body(r) finally sc.removeSparkListener(r)
+  /** Runs `body` as a sample tagged `tag` and reads what it was credited. */
+  private def sample(tag: String)(body: => Unit): SampleStats = {
+    val since = SampleStats.lastJob(sc)
+    SampleStats.tagged(sc, tag)(body)
+    drain()
+    SampleStats.read(sc, tag, since).fold(e => fail(e), identity)
   }
 
   test("a tagged two-stage groupBy is credited its stages, tasks and shuffle bytes") {
     val tagStages = ConcurrentHashMap.newKeySet[Int]()
     val numTasks = new ConcurrentHashMap[Int, Int]()
+    // an independent record of the tagged job's stages: the job tags ride
+    // in the job's properties as a comma-separated list
     val probe = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty(SampleRecorder.Key) == "groupBy"))
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains("groupBy")))
           e.stageInfos.foreach(s => tagStages.add(s.stageId))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         numTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
     }
     sc.addSparkListener(probe)
-    try withRecorder { r =>
-      SampleRecorder.tagged(sc, "groupBy")(groupBy())
-      drain()
-      val s = r.take("groupBy")
+    try {
+      val s = sample("groupBy")(groupBy())
       assert(s.jobs >= 1)
       assert(s.stages >= 2, s"expected map + result stages, got $s")
       assert(s.shuffleWriteBytes > 0 && s.shuffleReadBytes > 0, s.toString)
@@ -61,52 +64,78 @@ class BenchRecorderSpec extends SparkSuite {
       val ran = tagStages.asScala.toSeq.flatMap(id => Option(numTasks.get(id)))
       assert(ran.size == s.stages)
       assert(s.tasks == ran.map(_.toLong).sum, s"tasks $s vs stages $ran")
-      assert(r.tags.isEmpty, "take must forget the tag")
     } finally sc.removeSparkListener(probe)
   }
 
   test("an untagged job running at the same time on another thread is credited to no sample") {
-    withRecorder { r =>
-      SampleRecorder.tagged(sc, "alone")(groupBy())
-      drain()
-      val alone = r.take("alone")
-      // started before any tag is set: local properties are inherited by
-      // threads created under them
-      val other = new Thread(() =>
-        sc.parallelize(1 to 4, 4).foreach { _ =>
-          running.countDown()
-          release.await(60, TimeUnit.SECONDS)
-        })
-      other.start()
-      try {
-        assert(running.await(60, TimeUnit.SECONDS), "untagged job never started")
-        SampleRecorder.tagged(sc, "busy")(groupBy())
-      } finally {
-        release.countDown()
-        other.join(60000)
-      }
-      drain()
-      assert(r.tags == Set("busy"))
-      val busy = r.take("busy")
-      assert((busy.jobs, busy.stages, busy.tasks) ==
-        (alone.jobs, alone.stages, alone.tasks), s"$busy vs $alone")
+    val alone = sample("alone")(groupBy())
+    // started before any tag is set: local properties are inherited by
+    // threads created under them
+    val other = new Thread(() =>
+      sc.parallelize(1 to 4, 4).foreach { _ =>
+        running.countDown()
+        release.await(60, TimeUnit.SECONDS)
+      })
+    val since = SampleStats.lastJob(sc)
+    other.start()
+    val busy = try {
+      assert(running.await(60, TimeUnit.SECONDS), "untagged job never started")
+      sample("busy")(groupBy())
+    } finally {
+      release.countDown()
+      other.join(60000)
     }
+    assert(Shims.jobs(sc).count(j => j.jobId > since && j.jobTags.isEmpty) == 1,
+      "the other thread's job carries a tag")
+    assert((busy.jobs, busy.stages, busy.tasks) ==
+      (alone.jobs, alone.stages, alone.tasks), s"$busy vs $alone")
   }
 
   test("after the tag is cleared, a later job on the same thread is credited to nothing") {
-    withRecorder { r =>
-      SampleRecorder.tagged(sc, "sample")(groupBy())
-      assert(sc.getLocalProperty(SampleRecorder.Key) == null)
-      groupBy()
-      drain()
-      assert(r.tags == Set("sample"))
-      val sample = r.take("sample")
-      SampleRecorder.tagged(sc, "ref")(groupBy())
-      drain()
-      val ref = r.take("ref")
-      assert((sample.jobs, sample.stages, sample.tasks) ==
-        (ref.jobs, ref.stages, ref.tasks), s"$sample vs $ref")
-      assert(r.tags.isEmpty)
-    }
+    val since = SampleStats.lastJob(sc)
+    SampleStats.tagged(sc, "sample")(groupBy())
+    assert(!sc.getJobTags().contains("sample"))
+    drain()
+    val cleared = SampleStats.lastJob(sc)
+    groupBy()
+    drain()
+    val later = Shims.jobs(sc).filter(_.jobId > cleared)
+    assert(later.nonEmpty && later.forall(_.jobTags.isEmpty),
+      "a job after the tag was removed carries a tag")
+    val s = SampleStats.read(sc, "sample", since).fold(e => fail(e), identity)
+    val ref = sample("ref")(groupBy())
+    assert((s.jobs, s.stages, s.tasks) == (ref.jobs, ref.stages, ref.tasks),
+      s"$s vs $ref")
+  }
+
+  test("evicted skipped stages lose nothing; an evicted job reads as an error, not as zero") {
+    // spark.ui.retainedStages and retainedJobs are 1000, and each cleanup
+    // drops at least the oldest finished tenth; skipped stages never
+    // completed, so they sort oldest and go first. A 100-shuffle chain
+    // that has run once is cheap to run again: every map stage of the
+    // rerun is a fresh skipped stage.
+    val one = new org.apache.spark.HashPartitioner(1)
+    // map drops the partitioner, so every partitionBy shuffles
+    val chain = (1 to 100).foldLeft(sc.parallelize(Seq(1 -> 1), 1))(
+      (rdd, _) => rdd.partitionBy(one).map(identity))
+    chain.count()
+    val ref = sample("unevicted")(groupBy())
+    val since = SampleStats.lastJob(sc)
+    SampleStats.tagged(sc, "kept")(groupBy())
+    (1 to 12).foreach(_ => chain.count())
+    drain()
+    val tagged = Shims.jobs(sc).filter(_.jobTags.contains("kept"))
+    assert(tagged.flatMap(_.stageIds).exists(Shims.stageAttempts(sc, _).isEmpty),
+      "no skipped stage of the sample was evicted")
+    val kept = SampleStats.read(sc, "kept", since).fold(e => fail(e), identity)
+    assert((kept.jobs, kept.stages, kept.tasks) == (ref.jobs, ref.stages, ref.tasks),
+      s"$kept vs $ref")
+    // jobs over no partitions run no stage, but the store keeps them too:
+    // this many push the sample's own jobs out
+    (1 to 1000).foreach(_ => sc.emptyRDD[Int].count())
+    drain()
+    val r = SampleStats.read(sc, "kept", since)
+    assert(r.isLeft, s"an evicted sample read as $r")
+    assert(r.swap.exists(_.contains("evicted")), r.toString)
   }
 }

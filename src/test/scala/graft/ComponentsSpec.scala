@@ -100,17 +100,22 @@ class ComponentsSpec extends SparkSuite {
   test("reliable checkpoint mode writes rounds to the checkpoint dir") {
     // cluster path: truncated lineage must survive executor loss, so the
     // per-round snapshots go to a fault-tolerant dir instead of executor
-    // blocks (localCheckpoint). Same results, files actually written.
+    // blocks (localCheckpoint). Same results, files actually written, and
+    // release deletes them: run after run, none are left behind.
     val dir = java.nio.file.Files
       .createTempDirectory("graft-cc-checkpoint").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("spark.graft.components.checkpoint", "reliable")
+    def files(): Long = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
     try {
-      val labels = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(written > 0, "reliable mode produced no checkpoint files")
+      (1 to 3).foreach { run =>
+        val labels = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
+        assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+        assert(files() > 0, s"run $run: reliable mode produced no checkpoint files")
+        graft.operators.Dedup.releaseCaches()
+        assert(files() == 0, s"run $run: release left ${files()} checkpoint files")
+      }
     } finally {
       spark.conf.set("spark.graft.components.checkpoint", "local")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

@@ -436,17 +436,6 @@ class GraftContextSpec extends SparkSuite {
     }
   }
 
-  test("sqlAsync returns the same result as sql") {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    import scala.concurrent.Await
-    val ctx = GraftContext(spark)
-    ctx.createTable("gc_orders", s"$sfDir/orders.parquet")
-    val fut = ctx.sqlAsync("SELECT count(*) AS n FROM gc_orders")
-    val n = Await.result(fut, 60.seconds).collect()(0).getLong(0)
-    assert(n == ctx.sql("SELECT count(*) AS n FROM gc_orders").collect()(0).getLong(0))
-  }
-
   test("validate/profile surface audits a registered table") {
     import graft.operators.Validation.{Completeness, Uniqueness}
     val ctx = GraftContext(spark)
