@@ -258,16 +258,9 @@ class GraftContext(val spark: SparkSession) {
     */
   def createTablePostgres(name: String, host: String, port: Int,
       database: String, user: String, password: String, table: String,
-      partitionColumn: String = "", numPartitions: Int = 1): DataFrame = {
-    var r = spark.read.format("postgres")
-      .option("host", host).option("port", port.toString)
-      .option("database", database).option("user", user)
-      .option("password", password).option("dbtable", table)
-    if (partitionColumn.nonEmpty)
-      r = r.option("partitionColumn", partitionColumn)
-        .option("numPartitions", numPartitions.toString)
-    register(name, r.load(), None, "postgres")
-  }
+      partitionColumn: String = "", numPartitions: Int = 1): DataFrame =
+    createTableDb("postgres", name, host, port, database, user, password,
+      table, partitionColumn, numPartitions)
 
   /** Register a live MySQL table through the built-in wire-protocol
     * client (sources/MyLite.scala — no driver jar; handshake v10,
@@ -278,15 +271,22 @@ class GraftContext(val spark: SparkSession) {
     */
   def createTableMySql(name: String, host: String, port: Int,
       database: String, user: String, password: String, table: String,
-      partitionColumn: String = "", numPartitions: Int = 1): DataFrame = {
-    var r = spark.read.format("mysql")
+      partitionColumn: String = "", numPartitions: Int = 1): DataFrame =
+    createTableDb("mysql", name, host, port, database, user, password,
+      table, partitionColumn, numPartitions)
+
+  /** Register a table read through the wire-protocol source `format`. */
+  private def createTableDb(format: String, name: String, host: String,
+      port: Int, database: String, user: String, password: String,
+      table: String, partitionColumn: String, numPartitions: Int): DataFrame = {
+    var r = spark.read.format(format)
       .option("host", host).option("port", port.toString)
       .option("database", database).option("user", user)
       .option("password", password).option("dbtable", table)
     if (partitionColumn.nonEmpty)
       r = r.option("partitionColumn", partitionColumn)
         .option("numPartitions", numPartitions.toString)
-    register(name, r.load(), None, "mysql")
+    register(name, r.load(), None, format)
   }
 
   /** Register an existing CATALOG (e.g. Hive-metastore) table under

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{BloomContainsExpr, BloomPositionsExpr, CharEntropyExpr, CmsEstimateExpr, CosineSimilarity, GopherStatsExpr, GramBucketsExpr, GramMd5sExpr, LangIdExpr, MinHashSignature, MinHashText, MortonInterleaveExpr, NfcNormalize, NormalizeText, QualityStatsExpr, ReadCountsExpr, RepStatsExpr, ReplayMinhashExpr, ReplaySimhashExpr, SigEqCount, SimHash64, WinnowFpsExpr}
+import org.apache.spark.sql.graft.Shims
+import graft.{functions => f}
 
 /** SparkSessionExtensions entry point — the idiomatic injection path for
   * the custom expressions, so any session (including spark-sql / thrift /
@@ -33,99 +34,72 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   type Builder = Seq[Expression] => Expression
 
-  private def litNum(e: Expression, fn: String, arg: String): Long = e match {
-    case Literal(v: Int, _)   => v.toLong
-    case Literal(v: Long, _)  => v
-    case Literal(v: Short, _) => v.toLong
-    case Literal(v: Byte, _)  => v.toLong
-    case other => throw new IllegalArgumentException(
-      s"$fn: argument '$arg' must be an integer literal, got $other")
+  /** The arguments of one call to the SQL function `fn`. */
+  private final class Args(fn: String, cols: Seq[Column]) {
+    def apply(i: Int): Column = cols(i)
+    /** The optional integer-literal argument `arg` at position `i`, or
+      * `default` when the call is shorter. */
+    def long(i: Int, arg: String, default: Long = 0L): Long =
+      if (cols.size <= i) default
+      else Shims.expression(cols(i)) match {
+        case Literal(v: Int, _)   => v.toLong
+        case Literal(v: Long, _)  => v
+        case Literal(v: Short, _) => v.toLong
+        case Literal(v: Byte, _)  => v.toLong
+        case other => throw new IllegalArgumentException(
+          s"$fn: argument '$arg' must be an integer literal, got $other")
+      }
+    def int(i: Int, arg: String, default: Int = 0): Int = long(i, arg, default).toInt
   }
-  private def arity(fn: String, exprs: Seq[Expression], min: Int, max: Int): Unit =
-    if (exprs.size < min || exprs.size > max)
-      throw new IllegalArgumentException(
-        s"$fn expects $min..$max arguments, got ${exprs.size}")
 
-  private def fn(name: String, cls: Class[_])(build: Builder) =
-    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+  /** The SQL function `name`, taking `min` to `max` arguments, built by
+    * its Column twin in [[graft.functions]]. */
+  private def fn(name: String, min: Int, max: Int)(build: Args => Column) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[graft.functions.Kernel].getName, name),
+      (e: Seq[Expression]) => {
+        if (e.size < min || e.size > max)
+          throw new IllegalArgumentException(
+            s"$name expects $min..$max arguments, got ${e.size}")
+        Shims.expression(build(new Args(name, e.map(Shims.column))))
+      })
 
   /** Every SQL-surface function: name, info and a builder that validates
     * arity and reads optional integer parameters from foldable literals
     * (silent defaulting on extra args would return wrong signatures). */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
-    fn("cosine_similarity", classOf[CosineSimilarity]) { e =>
-      arity("cosine_similarity", e, 2, 2)
-      CosineSimilarity(e(0), e(1))
-    },
-    fn("minhash_signature", classOf[MinHashSignature]) { e =>
-      arity("minhash_signature", e, 1, 3)
-      val k = if (e.size >= 2) litNum(e(1), "minhash_signature", "k").toInt else 128
-      val seed = if (e.size >= 3) litNum(e(2), "minhash_signature", "seed") else 42L
-      MinHashSignature(e(0), k, seed)
-    },
-    fn("minhash_text", classOf[MinHashText]) { e =>
-      arity("minhash_text", e, 1, 4)
-      val n = if (e.size >= 2) litNum(e(1), "minhash_text", "n").toInt else 3
-      val k = if (e.size >= 3) litNum(e(2), "minhash_text", "k").toInt else 128
-      val seed = if (e.size >= 4) litNum(e(3), "minhash_text", "seed") else 42L
-      MinHashText(e(0), n, k, seed)
-    },
-    fn("winnow_fps", classOf[WinnowFpsExpr]) { e =>
-      arity("winnow_fps", e, 1, 3)
-      val k = if (e.size >= 2) litNum(e(1), "winnow_fps", "k").toInt else 5
-      val w = if (e.size >= 3) litNum(e(2), "winnow_fps", "w").toInt else 4
-      WinnowFpsExpr(e(0), k, w)
-    },
-    fn("sig_eq_count", classOf[SigEqCount]) { e =>
-      arity("sig_eq_count", e, 2, 2)
-      SigEqCount(e(0), e(1))
-    },
+    fn("cosine_similarity", 2, 2)(a => f.cosine_similarity(a(0), a(1))),
+    fn("minhash_signature", 1, 3)(a =>
+      f.minhash_signature(a(0), a.int(1, "k", 128), a.long(2, "seed", 42L))),
+    fn("minhash_text", 1, 4)(a => f.minhash_text(a(0), a.int(1, "n", 3),
+      a.int(2, "k", 128), a.long(3, "seed", 42L))),
+    fn("winnow_fps", 1, 3)(a => f.winnow_fps(a(0), a.int(1, "k", 5), a.int(2, "w", 4))),
+    fn("sig_eq_count", 2, 2)(a => f.sig_eq_count(a(0), a(1))),
     // sketch double-hash family: (key, m, k) / (bits, key, m, k) /
     // (cms, key, w, d) / (cells, bits)
-    fn("bloom_positions", classOf[BloomPositionsExpr]) { e =>
-      arity("bloom_positions", e, 3, 3)
-      BloomPositionsExpr(e(0), litNum(e(1), "bloom_positions", "m").toInt,
-        litNum(e(2), "bloom_positions", "k").toInt)
-    },
-    fn("bloom_contains", classOf[BloomContainsExpr]) { e =>
-      arity("bloom_contains", e, 4, 4)
-      BloomContainsExpr(e(0), e(1), litNum(e(2), "bloom_contains", "m").toInt,
-        litNum(e(3), "bloom_contains", "k").toInt)
-    },
-    fn("cms_estimate", classOf[CmsEstimateExpr]) { e =>
-      arity("cms_estimate", e, 4, 4)
-      CmsEstimateExpr(e(0), e(1), litNum(e(2), "cms_estimate", "w").toInt,
-        litNum(e(3), "cms_estimate", "d").toInt)
-    },
-    fn("morton_interleave", classOf[MortonInterleaveExpr]) { e =>
-      arity("morton_interleave", e, 2, 2)
-      MortonInterleaveExpr(e(0), litNum(e(1), "morton_interleave", "bits").toInt)
-    }
+    fn("bloom_positions", 3, 3)(a => f.bloom_positions(a(0), a.int(1, "m"), a.int(2, "k"))),
+    fn("bloom_contains", 4, 4)(a =>
+      f.bloom_contains(a(0), a(1), a.int(2, "m"), a.int(3, "k"))),
+    fn("cms_estimate", 4, 4)(a => f.cms_estimate(a(0), a(1), a.int(2, "w"), a.int(3, "d"))),
+    fn("morton_interleave", 2, 2)(a => f.morton_interleave(a(0), a.int(1, "bits")))
   ) ++
     // one-argument kernels, SQL-callable like their Column twins
-    Seq[(String, Class[_], Expression => Expression)](
-      ("simhash64", classOf[SimHash64], SimHash64(_)),
-      ("normalize_text", classOf[NormalizeText], NormalizeText(_)),
-      ("nfc_normalize", classOf[NfcNormalize], NfcNormalize(_)),
-      ("lang_id", classOf[LangIdExpr], LangIdExpr(_)),
-      ("char_entropy", classOf[CharEntropyExpr], CharEntropyExpr(_)),
-      ("quality_stats", classOf[QualityStatsExpr], QualityStatsExpr(_)),
-      ("gopher_stats", classOf[GopherStatsExpr], GopherStatsExpr(_)),
-      ("read_counts", classOf[ReadCountsExpr], ReadCountsExpr(_)),
-      ("rep_stats", classOf[RepStatsExpr], RepStatsExpr(_)),
-      ("replay_simhash", classOf[ReplaySimhashExpr], ReplaySimhashExpr(_))
-    ).map { case (name, cls, mk) =>
-      fn(name, cls) { e => arity(name, e, 1, 1); mk(e(0)) }
-    } ++
+    Seq[(String, Column => Column)](
+      ("simhash64", f.simhash64),
+      ("normalize_text", f.normalize_text),
+      ("nfc_normalize", f.nfc_normalize),
+      ("lang_id", f.lang_id),
+      ("char_entropy", f.char_entropy),
+      ("quality_stats", f.quality_stats),
+      ("gopher_stats", f.gopher_stats),
+      ("read_counts", f.read_counts),
+      ("rep_stats", f.rep_stats),
+      ("replay_simhash", f.replay_simhash)
+    ).map { case (name, mk) => fn(name, 1, 1)(a => mk(a(0))) } ++
     // text + integer-literal gram/window params
-    Seq[(String, Class[_], (Expression, Int) => Expression, Int)](
-      ("gram_md5s", classOf[GramMd5sExpr], GramMd5sExpr(_, _), 10),
-      ("gram_buckets", classOf[GramBucketsExpr], GramBucketsExpr(_, _), 2),
-      ("replay_minhash", classOf[ReplayMinhashExpr], ReplayMinhashExpr(_, _), 3)
-    ).map { case (name, cls, mk, dflt) =>
-      fn(name, cls) { e =>
-        arity(name, e, 1, 2)
-        mk(e(0), if (e.size >= 2) litNum(e(1), name, "n").toInt else dflt)
-      }
-    }
+    Seq[(String, (Column, Int) => Column, Int)](
+      ("gram_md5s", f.gram_md5s, 10),
+      ("gram_buckets", f.gram_buckets, 2),
+      ("replay_minhash", f.replay_minhash, 3)
+    ).map { case (name, mk, dflt) => fn(name, 1, 2)(a => mk(a(0), a.int(1, "n", dflt))) }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernels invoked from generated code (doGenCode) and from
-  * interpreted eval. Keeping these as plain static-style methods lets the
-  * custom expressions stay inside whole-stage codegen: the generated code
-  * is a single virtual-free call per row.
+/** Static kernels, each bound to Catalyst by one [[Kernel]] node (a
+  * `StaticInvoke`), which calls it from generated code and from
+  * interpreted eval. Keeping these as plain static-style methods keeps
+  * the kernels inside whole-stage codegen: the generated code is a single
+  * virtual-free call per row.
   */
 object VectorOps {
 

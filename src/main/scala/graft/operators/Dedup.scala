@@ -328,7 +328,7 @@ object Dedup {
     val candidates0 = bandCandidates(sigs, bands, r, bucketCap, scale)
     val candidates = if (scale) Caches.persist(candidates0) else candidates0
 
-    // fused per-pair match count (SigEqCount) — bit-identical to the
+    // fused per-pair match count (sig_eq_count) — bit-identical to the
     // interpreted zip_with/aggregate fold (RegressionSpec); this runs
     // once per candidate pair, the LSH-verify hot loop
     val est = sig_eq_count(col("sig_a"), col("sig_b")).cast("double") / k
@@ -374,7 +374,7 @@ object Dedup {
       "the replayable family is fixed at k=16 (4 md5 salts × 4 chunks), bands=8 " +
         "— the published oracle SQL hard-codes this shape")
     val r = k / bands
-    // fused one-pass kernel (ReplayMinhashExpr) — bit-identical to the
+    // fused one-pass kernel (replay_minhash) — bit-identical to the
     // staged declarative form ([[replayMinhashSigsDeclarative]],
     // RegressionSpec)
     val sigs0 = Par.ensure(docs, col(idCol))
@@ -396,7 +396,7 @@ object Dedup {
     val cands0 = guardedBandPairs(banded, Seq("band", "bkey"), bucketCap,
       scalePath = Some(scale))
     val cands = if (scale) Caches.persist(cands0) else cands0
-    // fused per-pair match count (SigEqCount) — bit-identical to the
+    // fused per-pair match count (sig_eq_count) — bit-identical to the
     // interpreted zip_with/aggregate fold (RegressionSpec); this runs
     // once per candidate pair, the LSH-verify hot loop
     val est = sig_eq_count(col("sig_a"), col("sig_b")).cast("double") / k
@@ -414,7 +414,7 @@ object Dedup {
   /** Declarative twin of the replayable-minhash signature construction —
     * the formulation the DuckDB oracle replays (4 staged salted digest
     * arrays, 16 chunk minima via array_min(transform(substring))). Kept
-    * as the bit-identity baseline for ReplayMinhashExpr
+    * as the bit-identity baseline for replay_minhash
     * (RegressionSpec). */
   private[graft] def replayMinhashSigsDeclarative(docs: DataFrame,
       textCol: String, idCol: String, shingle: Int = 3): DataFrame = {
@@ -818,7 +818,7 @@ object Dedup {
     * both engines. All output ratios are single int/int divisions.
     *
     * Scale shape: selection is map-side and O(grams) — the fused
-    * [[graft.functions.WinnowFpsExpr]] kernel (monotonic-deque window
+    * [[graft.functions.winnow_fps]] kernel (monotonic-deque window
     * min; result-identical to the declarative O(grams·w) fold below,
     * asserted in RegressionSpec); only the selected ~2/(w+1) fraction of
     * (id, 16-byte hash) pairs ever shuffles for the cross-doc pass (same
@@ -984,7 +984,7 @@ object Dedup {
     */
   private def replayableSigs(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    // fused one-pass kernel (ReplaySimhashExpr) — bit-identical to the
+    // fused one-pass kernel (replay_simhash) — bit-identical to the
     // declarative 64-unrolled-column form below (RegressionSpec)
     val sigs0 = Par.ensure(docs, col(idCol))
       .select(col(idCol).as("id"), replay_simhash(col(textCol)).as("st"))

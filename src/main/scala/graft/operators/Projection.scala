@@ -19,7 +19,7 @@ import graft.functions.sign_project
   * regenerable by the DuckDB oracle, so projected vectors (and the ANN
   * rankings over them) are replayable like every other hash family here.
   * The matrix ships as a codegen reference object inside one fused
-  * expression ([[graft.functions.SignProjectExpr]]): broadcast model
+  * kernel ([[graft.functions.sign_project]]): broadcast model
   * state, one generated loop, no k-term expression tree.
   */
 object Projection {

@@ -253,7 +253,7 @@ object Sampling {
       topK: Int = 200, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(buckets == 256, "bucket count is fixed at 256 (two md5 hex chars)")
-    // Fused tokenize→shingle→md5-first-byte kernel (GramBucketsExpr —
+    // Fused tokenize→shingle→md5-first-byte kernel (gram_buckets —
     // bit-identical to conv(substring(md5(gram),1,2),16,10) over
     // word_shingles, RegressionSpec). The persisted per-doc state is an
     // array<int> of buckets (4 B/gram) instead of the gram STRINGS the

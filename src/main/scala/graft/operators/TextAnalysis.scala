@@ -158,7 +158,7 @@ object TextAnalysis {
     * int/int divisions).
     *
     * Cost model: map-side only (no shuffle), one fused O(grams) kernel
-    * per row ([[graft.functions.RepStatsExpr]] — run lengths are multiset
+    * per row ([[graft.functions.rep_stats]] — run lengths are multiset
     * properties, so a hash map over exact gram bytes replaces the
     * declarative sort+fold; result-identity asserted in RegressionSpec
     * against [[gopherRepetitionDeclarative]]).

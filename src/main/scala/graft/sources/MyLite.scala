@@ -563,45 +563,18 @@ class MySqlScan(opts: MyOptions, required: StructType,
       (if (where.nonEmpty) s", PushedFilters: [${where.mkString(", ")}]"
        else "")
 
-  private def selectFor(extraPred: Option[String]): String = {
-    val cols =
-      if (required.isEmpty) "1"
-      else required.fieldNames.map(c =>
-        "`" + c.replace("`", "``") + "`").mkString(", ")
-    val preds = where ++ extraPred
-    s"SELECT $cols FROM ${opts.quotedTable}" +
-      (if (preds.nonEmpty) s" WHERE ${preds.mkString(" AND ")}" else "")
-  }
-
   override def planInputPartitions(): Array[InputPartition] =
-    opts.partitionColumn match {
-      case Some(col) if opts.numPartitions > 1 =>
-        val q = "`" + col.replace("`", "``") + "`"
-        val (lo, hi) = {
-          val conn = opts.connect()
-          try {
-            val r = conn.query(
-              s"SELECT min($q), max($q) FROM ${opts.quotedTable}")
-            val row = r.rows.headOption
-              .getOrElse(Array[Array[Byte]](null, null))
-            if (row(0) == null) (0L, 0L)
-            else (new String(row(0), UTF_8).toLong,
-              new String(row(1), UTF_8).toLong)
-          } finally conn.close()
-        }
-        val n = opts.numPartitions.toLong
-        val span = math.max(1L, (hi - lo + n) / n)
-        (0 until opts.numPartitions).map { i =>
-          val start = lo + i * span
-          val pred =
-            if (i == 0 && i == opts.numPartitions - 1) s"$q IS NOT NULL"
-            else if (i == 0) s"$q < ${start + span}"
-            else if (i == opts.numPartitions - 1) s"$q >= $start"
-            else s"($q >= $start AND $q < ${start + span})"
-          MyPartition(i, selectFor(Some(pred))): InputPartition
-        }.toArray
-      case _ => Array(MyPartition(0, selectFor(None)))
-    }
+    SqlFilter.selects(opts.quotedTable, required, where, opts.partitionColumn,
+      opts.numPartitions, c => "`" + c.replace("`", "``") + "`",
+      sql => {
+        val conn = opts.connect()
+        try {
+          val row = conn.query(sql).rows.headOption
+            .getOrElse(Array[Array[Byte]](null, null))
+            .map(c => if (c == null) null else new String(c, UTF_8))
+          (row(0), row(1))
+        } finally conn.close()
+      }).zipWithIndex.map { case (sql, i) => MyPartition(i, sql): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MyReaderFactory(opts, required)

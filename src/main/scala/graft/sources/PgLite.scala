@@ -500,8 +500,8 @@ object PgDecode {
   * SELECT sent to the server (the reference pushes the same way —
   * AbstractSQLDataProvider.cpp:53 builds `SELECT <cols> FROM t WHERE
   * <predicates> LIMIT n OFFSET m`). Partitioning: `partitionColumn` +
-  * `numPartitions` (+ optional `lowerBound`/`upperBound`) slice by range
-  * predicates, the shape that scales — LIMIT/OFFSET batches (the
+  * `numPartitions` slice by range predicates ([[SqlFilter.selects]]),
+  * the shape that scales — LIMIT/OFFSET batches (the
   * reference's table_batch_size) force the server to re-sort per batch.
   */
 class PostgresDataSource extends TableProvider with DataSourceRegister {
@@ -528,7 +528,6 @@ class PostgresDataSource extends TableProvider with DataSourceRegister {
 final case class PgOptions(host: String, port: Int, database: String,
     user: String, password: String, table: String,
     partitionColumn: Option[String], numPartitions: Int,
-    lowerBound: Option[Long], upperBound: Option[Long],
     sslMode: String = "disable", sslRootCert: Option[String] = None,
     sslCert: Option[String] = None, sslKey: Option[String] = None) {
   def connect(): PgConnection =
@@ -553,8 +552,6 @@ object PgOptions {
       table = req("dbtable"),
       partitionColumn = Option(m.get("partitionColumn")),
       numPartitions = Option(m.get("numPartitions")).map(_.toInt).getOrElse(1),
-      lowerBound = Option(m.get("lowerBound")).map(_.toLong),
-      upperBound = Option(m.get("upperBound")).map(_.toLong),
       sslMode = Option(m.get("sslmode")).getOrElse("disable"),
       sslRootCert = Option(m.get("sslrootcert")),
       sslCert = Option(m.get("sslcert")),
@@ -626,6 +623,46 @@ private[sources] object SqlFilter {
       case _ => None
     }
   }
+
+  /** The SELECT of each partition of a scan of `table`: the `required`
+    * columns (the literal 1 for an empty projection, as count(*) plans
+    * need a column) under the pushed `where` predicates. With a
+    * `partitionColumn` and `numPartitions` > 1, the key range that
+    * `minMax` fetches for its SQL (the two result cells, null on an empty
+    * table) is cut into equal slices, the same pattern Spark's JDBC
+    * relation uses. The edge slices are open-ended, so each non-null key
+    * lands in exactly one slice whatever the bounds. */
+  def selects(table: String, required: StructType, where: Array[String],
+      partitionColumn: Option[String], numPartitions: Int,
+      quote: String => String,
+      minMax: String => (String, String)): IndexedSeq[String] = {
+    def select(extraPred: Option[String]): String = {
+      val cols =
+        if (required.isEmpty) "1" else required.fieldNames.map(quote).mkString(", ")
+      val preds = where ++ extraPred
+      s"SELECT $cols FROM $table" +
+        (if (preds.nonEmpty) s" WHERE ${preds.mkString(" AND ")}" else "")
+    }
+    partitionColumn match {
+      case Some(col) if numPartitions > 1 =>
+        val q = quote(col)
+        val (lo, hi) = minMax(s"SELECT min($q), max($q) FROM $table") match {
+          case (null, _) => (0L, 0L)
+          case (l, h) => (l.toLong, h.toLong)
+        }
+        val n = numPartitions.toLong
+        val span = math.max(1L, (hi - lo + n) / n) // ceil, ≥1
+        (0 until numPartitions).map { i =>
+          val start = lo + i * span
+          select(Some(
+            if (i == 0 && i == numPartitions - 1) s"$q IS NOT NULL"
+            else if (i == 0) s"$q < ${start + span}"
+            else if (i == numPartitions - 1) s"$q >= $start"
+            else s"($q >= $start AND $q < ${start + span})"))
+        }
+      case _ => IndexedSeq(select(None))
+    }
+  }
 }
 
 class PostgresScanBuilder(opts: PgOptions, full: StructType)
@@ -662,50 +699,16 @@ class PostgresScan(opts: PgOptions, full: StructType, required: StructType,
       (if (where.nonEmpty) s", PushedFilters: [${where.mkString(", ")}]"
        else "")
 
-  /** The SELECT one partition runs. Empty projection (count(*) plans)
-    * still needs a column — project the literal 1. */
-  private def selectFor(extraPred: Option[String]): String = {
-    val cols =
-      if (required.isEmpty) "1"
-      else required.fieldNames.map(c =>
-        "\"" + c.replace("\"", "\"\"") + "\"").mkString(", ")
-    val preds = where ++ extraPred
-    s"SELECT $cols FROM ${opts.quotedTable}" +
-      (if (preds.nonEmpty) s" WHERE ${preds.mkString(" AND ")}" else "")
-  }
-
   override def planInputPartitions(): Array[InputPartition] =
-    opts.partitionColumn match {
-      case Some(col) if opts.numPartitions > 1 =>
-        val q = "\"" + col.replace("\"", "\"\"") + "\""
-        // derive bounds remotely when not given: one tiny min/max query,
-        // the same pattern Spark's JDBC relation uses
-        val (lo, hi) = (opts.lowerBound, opts.upperBound) match {
-          case (Some(l), Some(h)) => (l, h)
-          case _ =>
-            val conn = opts.connect()
-            try {
-              val r = conn.query(
-                s"SELECT min($q), max($q) FROM ${opts.quotedTable}")
-              val row = r.rows.headOption.getOrElse(Array[String](null, null))
-              if (row(0) == null) (0L, 0L)
-              else (row(0).toLong, row(1).toLong)
-            } finally conn.close()
-        }
-        val n = opts.numPartitions.toLong
-        val span = math.max(1L, (hi - lo + n) / n) // ceil, ≥1
-        (0 until opts.numPartitions).map { i =>
-          val start = lo + i * span
-          val pred =
-            if (i == 0 && i == opts.numPartitions - 1) s"$q IS NOT NULL"
-            else if (i == 0) s"$q < ${start + span}"
-            else if (i == opts.numPartitions - 1) s"$q >= $start"
-            else s"($q >= $start AND $q < ${start + span})"
-          PgPartition(i, selectFor(Some(pred))): InputPartition
-        }.toArray
-      case _ =>
-        Array(PgPartition(0, selectFor(None)))
-    }
+    SqlFilter.selects(opts.quotedTable, required, where, opts.partitionColumn,
+      opts.numPartitions, c => "\"" + c.replace("\"", "\"\"") + "\"",
+      sql => {
+        val conn = opts.connect()
+        try {
+          val row = conn.query(sql).rows.headOption.getOrElse(Array[String](null, null))
+          (row(0), row(1))
+        } finally conn.close()
+      }).zipWithIndex.map { case (sql, i) => PgPartition(i, sql): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PgReaderFactory(opts, required)

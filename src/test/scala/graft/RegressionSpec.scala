@@ -611,7 +611,7 @@ class RegressionSpec extends SparkSuite {
 
   test("tokenize kernel is bit-identical to filter(split(lower)) ") {
     // the entry stage of every text pipeline — fused to one codegen'd
-    // call (TokensExpr); adversarial inputs: unicode (multi-byte must
+    // call (the tokens kernel); adversarial inputs: unicode (multi-byte must
     // never split), vertical tab (NOT whitespace in the RE2 class),
     // leading/trailing/repeated separators, empties, null
     val docs = Tables.load(spark, sfDir, "documents").limit(300)
@@ -629,8 +629,8 @@ class RegressionSpec extends SparkSuite {
     // and the fused path really is the custom expression, not a rewrite
     val plan = docs.select(graft.functions.tokens($"text"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("tokensexpr") || plan.contains("TokensExpr"),
-      s"expected TokensExpr in plan:\n$plan")
+    assert(plan.contains("tokens(text#"),
+      s"expected the tokens kernel in plan:\n$plan")
     // implicit-cast contract of the declarative twin: non-string inputs
     // tokenize via a string cast, not a runtime ClassCastException
     val nums = Seq(101L, 202L).toDF("n")

@@ -70,13 +70,13 @@ class ScaleSpec extends SparkSuite {
     val cents = Similarity.centroids(embs, nlist = 32)
     val assignPlan = Similarity.assign(embs, cents, "embedding", "vec_id", "c", top = 1)
       .queryExecution.executedPlan.toString
-    assert(assignPlan.contains("argmaxcosineexpr"), s"kernel missing:\n$assignPlan")
+    assert(assignPlan.contains("argmax_cosine("), s"kernel missing:\n$assignPlan")
     assert(!assignPlan.contains("Exchange") && !assignPlan.contains("Window"),
       s"assignment left the scan stage:\n$assignPlan")
     val books = Similarity.pqCodebooks(embs, m = 8, ksub = 16)
     val encPlan = Similarity.pqEncode(embs, books)
       .queryExecution.executedPlan.toString
-    assert(encPlan.contains("pqencodeexpr"), s"kernel missing:\n$encPlan")
+    assert(encPlan.contains("pq_encode("), s"kernel missing:\n$encPlan")
     assert(!encPlan.contains("Exchange"), s"encode shuffles:\n$encPlan")
   }
 
