@@ -27,6 +27,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rewrite that recognizes the row_number top-k idiom
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
+    // a sort over a one-partition input skips the range-sampling job
+    ext.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRangeSort)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }

@@ -1384,6 +1384,20 @@ object VectorOps {
     true
   }
 
+  /** How many of `keys` probe true against the bitmap: the per-row fold
+    * of [[bloomContains]] over an array. A null array (or bitmap) counts
+    * 0, as a doc with no grams does. */
+  def bloomCount(bits: ArrayData, keys: ArrayData, m: Int, k: Int): Long = {
+    if (bits == null || keys == null) return 0L
+    var n = 0L
+    var i = 0
+    while (i < keys.numElements()) {
+      if (!keys.isNullAt(i) && bloomContains(bits, keys.getUTF8String(i), m, k)) n += 1
+      i += 1
+    }
+    n
+  }
+
   /** Count-Min point estimate: min over the d row counters — bit-identical
     * to the array_min/zip_with declarative form. */
   def cmsEstimate(cms: ArrayData, key: UTF8String, w: Int, d: Int): Long = {

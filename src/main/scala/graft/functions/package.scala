@@ -218,6 +218,15 @@ package object functions {
     kernel("bloom_contains", "bloomContains", BooleanType, bits, key)(m, k)
   }
 
+  /** How many of the `keys` array's elements probe true against the
+    * bitmap — [[bloom_contains]] folded over an array in one call; a
+    * null array counts 0, so the result is never null. */
+  def bloom_count(bits: Column, keys: Column, m: Int, k: Int): Column = {
+    require(m % 32 == 0 && m > 0 && k > 0, s"need m%32==0, k>0; got m=$m k=$k")
+    col0(Kernel("bloom_count", "bloomCount", LongType, Seq(expr0(bits), expr0(keys)),
+      Seq(m, k), propagateNull = false))
+  }
+
   /** Count-Min point estimate (bit-identical to the array_min/zip_with
     * declarative form). */
   def cms_estimate(cms: Column, key: Column, w: Int, d: Int): Column = {

@@ -27,8 +27,11 @@ import graft.functions.{tokens, word_shingles}
   *    count; the dense bitmap materializes as ONE row holding an
   *    array<long> of m/32 words (m=2²⁷ → 16 MB — broadcast-joined model
   *    state, the k-means-centroid pattern).
-  *  - probe: corpus side never shuffles — broadcast the one-row bitmap,
-  *    membership is a codegen'd forall over element_at/bitwiseAND.
+  *  - probe: corpus side never shuffles — broadcast the one-row bitmap;
+  *    each row probes its own keys in one codegen'd kernel call
+  *    (`bloom_contains` for a key, `bloom_count` for a doc's gram array),
+  *    so decontamination counts per row, with no explode, no shuffle by
+  *    doc id and no join back.
   *
   * Words are 32 bits stored in BIGINT so every shifted value stays
   * positive and two's-complement-free — DuckDB `<<`/`&`/`bit_or` then
@@ -125,8 +128,8 @@ object Bloom {
         ok.contains(joinType.toLowerCase),
       s"prefilterJoin preserves semantics only for inner/semi joins; got $joinType")
     // hash the STRING form on both sides (the key may be numeric)
-    val bits = buildBits(right.select(col(key).cast("string").as(key)).distinct(),
-      col(key), m, k)
+    // no distinct(): bit_or is idempotent, a repeated key sets the same bits
+    val bits = buildBits(right.select(col(key).cast("string").as(key)), col(key), m, k)
     val pruned = left.crossJoin(broadcast(bits))
       .filter(mightContain(col("bits"), col(key).cast("string"), m, k))
       .drop("bits")
@@ -143,22 +146,15 @@ object Bloom {
   def ngramDecontaminate(docs: DataFrame, benchmark: DataFrame, n: Int,
       m: Int, k: Int, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    def grams(df: DataFrame) =
-      explode(array_distinct(word_shingles(tokens(df(textCol)), n))).as("gram")
-    val bits = buildBits(benchmark.select(grams(benchmark)).distinct(),
+    def grams(df: DataFrame) = array_distinct(word_shingles(tokens(df(textCol)), n))
+    val bits = buildBits(benchmark.select(explode(grams(benchmark)).as("gram")),
       col("gram"), m, k)
-    val hits = docs.select(col(idCol), grams(docs))
-      .crossJoin(broadcast(bits))
-      .filter(mightContain(col("bits"), col("gram"), m, k))
-      .groupBy(col(idCol))
-      // grams are per-doc distinct already (array_distinct before the
-      // explode) — count(1) ≡ count_distinct and saves the Expand + one
-      // (doc_id, gram) exchange
-      .agg(count(lit(1)).as("n_hits"))
-    docs.select(col(idCol)).join(hits, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_hits"), lit(0L)).as("n_bloom_hits"),
-        (coalesce(col("n_hits"), lit(0L)) > 0).as("flagged"))
+    // one probe per doc over its distinct grams: a null text or a doc
+    // shorter than n tokens has no grams and counts 0
+    docs.crossJoin(broadcast(bits))
+      .select(col(idCol), graft.functions.bloom_count(col("bits"), grams(docs), m, k)
+        .as("n_bloom_hits"))
+      .select(col(idCol), col("n_bloom_hits"), (col("n_bloom_hits") > 0).as("flagged"))
   }
 
   // --- native Tungsten key filter -----------------------------------------

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -118,51 +118,64 @@ private[graft] object Caches {
   }
 }
 
-/** Input parallelism guard for compute-heavy per-row operators (md5
-  * signature passes, per-doc folds). A small fixture parquet is a SINGLE
-  * row group ⇒ one scan split ⇒ one task doing all the work while 31
-  * cores idle. At corpus scale the scan itself yields thousands of
-  * splits, so the guard is a no-op there — it repartitions ONLY when the
-  * source has materially fewer partitions than the session's shuffle
-  * width. The decision is plan-time (partition count, not data).
+/** Input parallelism guard for CPU-bound per-row operators (md5
+  * signature passes, regex batteries, per-doc folds). Spark sizes scan
+  * splits by FILE bytes, so a few MB of text arrives as one split: one
+  * task does all the work while the other cores idle. [[ensure]] widens
+  * such an input to `defaultParallelism`, the cores, and returns it
+  * unchanged when it already has at least half that many partitions. At
+  * corpus scale the scan yields thousands of splits and the guard is a
+  * no-op.
+  *
+  * The decision is plan-time and reads the ANALYZED plan, never
+  * `df.rdd.getNumPartitions` (a second physical-planning pass, ~0.4 s
+  * measured on light queries). An explicit repartition count at the top
+  * of the plan is the partitions the input has. Otherwise each file scan
+  * counts the splits Spark's split planner packs at most,
+  * `(bytes + files × openCostInBytes) / maxPartitionBytes`, so a source
+  * of many small files is not widened; an input with a leaf it cannot
+  * size (V2, streaming) is left alone.
   */
 private[graft] object Par {
-  def ensure(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val want = df.sparkSession.sessionState.conf.numShufflePartitions
-    val have = df.rdd.getNumPartitions
-    if (have * 2 < want) df.repartition(want, key) else df
+  import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+    LogicalPlan, Range, Repartition, RepartitionByExpression}
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+    LogicalRelation}
+
+  /** `df`, or `df` repartitioned to the cores when it is starved: by
+    * `key` when given, round-robin otherwise. The count is explicit, so
+    * AQE never coalesces the tiny-bytes partitions back to one. */
+  def ensure(df: DataFrame, key: Column*): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    partitions(df, target) match {
+      case Some(have) if have * 2 < target =>
+        if (key.isEmpty) df.repartition(target) else df.repartition(target, key: _*)
+      case _ => df
+    }
   }
 
-  /** Fan a CPU-bound per-row stage out by ROWS, not input bytes — the
-    * generalized form of Multimodal's decode widen (r13): Spark sizes
-    * scan partitions by FILE bytes, so a few MB of text arrives in 1-2
-    * partitions, and a per-row kernel that costs 100-1000× its input
-    * bytes (regex batteries, gram folds) serializes on one core while
-    * the rest idle. Widens ONLY when the byte-sized scan estimate gives
-    * materially fewer partitions than the session's parallelism; at
-    * corpus scale the scan is already wide and this is a no-op by
-    * construction — no shuffle. The estimate reads file stats off the
-    * ANALYZED plan (no second planning pass, unlike rdd.getNumPartitions
-    * — measured ~0.4 s per call on light queries when Multimodal first
-    * tried it). The repartition uses an EXPLICIT count so AQE cannot
-    * coalesce the tiny-bytes partitions back to one.
-    */
-  def widenForCpu(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val maxPart = math.max(1L,
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    var bytes = 0L
-    var unknownLeaf = false
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        bytes += lr.relation.sizeInBytes
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
-      case _: org.apache.spark.sql.catalyst.plans.logical.Range => ()
-      case _ => unknownLeaf = true // V2/streaming: leave its partitioning
+  /** The partitions `df` is read as, estimated from its analyzed plan;
+    * None when a leaf cannot be sized. */
+  private[operators] def partitions(df: DataFrame, target: Int): Option[Long] = {
+    val conf = df.sparkSession.sessionState.conf
+    val maxPart = math.max(1L, conf.filesMaxPartitionBytes)
+    def splits(bytes: Long) = math.max(1L, (bytes + maxPart - 1) / maxPart)
+    def leaf(p: LogicalPlan): Option[Long] = p match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        Some(splits(fs.location.sizeInBytes +
+          fs.location.inputFiles.length * conf.filesOpenCostInBytes))
+      case lr: LogicalRelation => Some(splits(lr.relation.sizeInBytes))
+      case l: LocalRelation => Some(math.min(math.max(l.data.size, 1), target).toLong)
+      case r: Range => Some(r.numSlices.getOrElse(target).toLong)
+      case _ => None
     }
-    val estParts = math.max(1L, (bytes + maxPart - 1) / maxPart)
-    if (!unknownLeaf && estParts * 2 < target) df.repartition(target)
-    else df
+    df.queryExecution.analyzed match {
+      case r: Repartition if r.shuffle => Some(r.numPartitions.toLong)
+      case r: RepartitionByExpression if r.optNumPartitions.isDefined =>
+        r.optNumPartitions.map(_.toLong)
+      case plan =>
+        val each = plan.collectLeaves().map(leaf)
+        if (each.forall(_.isDefined)) Some(each.flatten.sum) else None
+    }
   }
 }

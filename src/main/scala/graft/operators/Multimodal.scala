@@ -40,39 +40,20 @@ object Multimodal {
     * 100-1000× the input (a 224×224 raster is 150 KB derived from a
     * ~1 KB PNG), so a byte-sized scan serializes the whole stage on one
     * core (measured: multimodal_resize 4.6 s single-threaded at sf0.1).
-    * Widen ONLY when the scan gave fewer partitions than cores; at real
-    * scale the scan is already wide and this is a no-op — no shuffle.
+    * Widen ONLY when the input has fewer partitions than cores
+    * ([[Par.partitions]]' plan-time estimate); at real scale the scan is
+    * already wide and this is a no-op — no shuffle. A light per-row
+    * stage (decode: ~50 µs/row) only pays for the widen shuffle when the
+    * input is sizable AND narrow; a heavy one (224×224 resample: ~1
+    * ms/row) wins even on a one-partition scan (measured 7× at sf0.1).
     */
   private def widenForCpu(df: DataFrame,
       heavyPerRow: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    // Estimate the scan's partition count from file stats on the ANALYZED
-    // plan (the dim() pattern) — `df.rdd.getNumPartitions` would be exact
-    // but runs a second full physical-planning pass (~0.4 s measured),
-    // which dominated every light multimodal query at sf0.1.
-    val maxPart = math.max(1L,
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    var bytes = 0L
-    var unknownLeaf = false
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        bytes += lr.relation.sizeInBytes
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
-      case _: org.apache.spark.sql.catalyst.plans.logical.Range => ()
-      case _ => unknownLeaf = true // V2/streaming: leave its partitioning
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    Par.partitions(df, target) match {
+      case Some(est) if (heavyPerRow || est > 1) && est < target => df.repartition(target)
+      case _ => df
     }
-    val estParts = math.max(1L, (bytes + maxPart - 1) / maxPart)
-    // repartition with an EXPLICIT count: AQE never coalesces a
-    // user-numbered repartition, whereas a keyed one would be merged
-    // back to one tiny-bytes partition — the exact pathology this fixes
-    // A light per-row stage (decode: ~50 µs/row) only pays for the
-    // widen shuffle when the input is sizable AND narrow; a heavy one
-    // (224×224 resample: ~1 ms/row) wins even on a one-partition scan
-    // (measured 7× at sf0.1).
-    val worth = heavyPerRow || estParts > 1
-    if (!unknownLeaf && worth && estParts < target) df.repartition(target)
-    else df
   }
 
   /** Build a media table from any table with an id + string column: the

@@ -146,7 +146,7 @@ object Validation {
     // partitions at fixture scale (guide §2.5). Exact aggregates
     // (count/min/max/decimal-sum/count-distinct) are partition-layout-
     // independent, so results are unchanged. No-op at corpus scale.
-    Par.widenForCpu(df).select(explode(array(columns.map(c =>
+    Par.ensure(df).select(explode(array(columns.map(c =>
         struct(lit(c).as("col_name"), col(c).cast("double").as("v"))): _*))
         .as("s"))
       .select(col("s.col_name").as("col_name"), col("s.v").as("v"))

@@ -1187,7 +1187,7 @@ object Curation {
       // ran on 1-2 partitions at fixture scale (0.8 s serial); per-row
       // projection + final sort are partition-layout-independent, so
       // results are unchanged and the widen is a no-op at corpus scale
-      graft.operators.Par.widenForCpu(t(s, dir, "documents"))
+      graft.operators.Par.ensure(t(s, dir, "documents"))
         .withColumn("s", aug)
         .select(col("doc_id"),
           nMatches(col("s"), email).as("n_emails"),

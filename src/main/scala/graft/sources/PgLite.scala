@@ -315,7 +315,7 @@ final class PgConnection(host: String, port: Int, database: String,
               sendMsg('p',
                 md5Password(user, password, salt).getBytes(UTF_8) :+ 0.toByte)
             case 10 => // AuthenticationSASL: \0-separated mechanism list
-              val mechs = new String(body.drop(4), UTF_8).split(' ')
+              val mechs = new String(body.drop(4), UTF_8).split('\u0000')
                 .filter(_.nonEmpty)
               // on a TLS link prefer SCRAM-SHA-256-PLUS (channel binding
               // to the server certificate — RFC 5802 §6 / RFC 5929); a

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
+import graft.functions.{tokens, word_shingles}
 import graft.operators.{Bloom, TextAnalysis}
 
 /** [[Bloom]] — the deterministic sketch-join path for oversized ban
@@ -96,6 +98,35 @@ class BloomSpec extends SparkSuite {
         .filter(col("doc_id") % 97 === 0 && !col("flagged")).count()
       assert(benchMissed === 0L)
     } finally joined.unpersist()
+  }
+
+  test("per-row bloom probe equals the explode-groupBy-join form") {
+    val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
+      .unionByName(Seq((-1L, null: String), (-2L, "two words")).toDF("doc_id", "text"))
+    val bench = docs.filter(col("doc_id") % 97 === 0)
+    val perRow = Bloom.ngramDecontaminate(docs, bench, n = 3, m = M, k = K)
+    // the former shape: one row per (doc, distinct gram) probed through
+    // the broadcast bitmap, counted per doc and left-joined back
+    def grams(df: org.apache.spark.sql.DataFrame) =
+      explode(array_distinct(word_shingles(tokens(df("text")), 3))).as("gram")
+    val bits = Bloom.buildBits(bench.select(grams(bench)).distinct(), col("gram"), M, K)
+    val hits = docs.select(col("doc_id"), grams(docs))
+      .crossJoin(broadcast(bits))
+      .filter(Bloom.mightContain(col("bits"), col("gram"), M, K))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+    val joined = docs.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_bloom_hits"),
+        (coalesce(col("n_hits"), lit(0L)) > 0).as("flagged"))
+    assert(perRow.schema == joined.schema)
+    val got = perRow.orderBy("doc_id").collect()
+    assert(got.sameElements(joined.orderBy("doc_id").collect()))
+    assert(got.count(_.getBoolean(2)) >= 10, "benchmark docs must flag")
+    // a null text and a doc shorter than n tokens have no grams
+    assert(got.take(2).toSeq == Seq(Row(-2L, 0L, false), Row(-1L, 0L, false)))
+    // bit_or is idempotent: repeated keys build the same bitmap
+    val dup = keys(300, "in").unionAll(keys(100, "in"))
+    assert(Bloom.buildBits(dup, col("gram"), M, K).collect().sameElements(
+      Bloom.buildBits(dup.distinct(), col("gram"), M, K).collect()))
   }
 
   test("nativeKeyBloom/nativePruned: no false negatives, real pruning, exact join") {

@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.TopKPerGroup
 
 /** Specs for the custom Catalyst operator (LogicalPlan + Strategy +
-  * SparkPlan): per-group top-k via bounded heaps.
+  * SparkPlan): per-group top-k via bounded heaps; and for the
+  * query-stage rule that ranges a sort over a one-partition input to one
+  * partition ([[graft.plans.OnePartitionRangeSort]]).
   */
 class PlansSpec extends SparkSuite {
 
@@ -124,5 +127,60 @@ class PlansSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       TopKPerGroup(nation, Seq("no_such_col"), Seq(col("n_nationkey")), 2)
     }
+  }
+
+  /** `df`'s rows and the number of jobs collecting them ran, read from
+    * the status store by job tag. */
+  private def rowsAndJobs(tag: String, df: DataFrame) = {
+    val sc = spark.sparkContext
+    val since = SampleStats.lastJob(sc)
+    val rows = SampleStats.tagged(sc, tag)(df.collect())
+    assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc, 30000L),
+      "listener bus did not drain")
+    (rows, SampleStats.read(sc, tag, since).fold(e => fail(e), _.jobs))
+  }
+
+  private def rangeParts(df: DataFrame): Seq[Int] =
+    "rangepartitioning\\([^\n]*, (\\d+)\\)".r
+      .findAllMatchIn(df.queryExecution.executedPlan.toString)
+      .map(_.group(1).toInt).toSeq
+
+  test("a sort over a one-split scan ranges to one partition and skips the sampling job") {
+    val docs = Tables.load(spark, sfDir, "documents") // single-split fixture
+    def sorted(in: DataFrame) =
+      in.filter(col("doc_id") % 3 =!= 0)
+        .select(col("doc_id"), md5(col("text")).as("h"), explode(split(col("lang"), "x")).as("l"))
+        .orderBy(col("h"), col("doc_id"))
+    val one = sorted(docs)
+    assert(rangeParts(one) == Seq(1), one.queryExecution.executedPlan.toString)
+    // a mapPartitions is not a node the rule sees through: the same
+    // single partition, but the exchange keeps its width and samples
+    val blind = sorted(docs.mapPartitions((it: Iterator[Row]) => it)(Encoders.row(docs.schema)))
+    assert(rangeParts(blind) == Seq(spark.sessionState.conf.numShufflePartitions))
+    val (rows, jobs) = rowsAndJobs("one-split-sort", one)
+    val (blindRows, blindJobs) = rowsAndJobs("one-split-sort-blind", blind)
+    assert(jobs == blindJobs - 1, s"$jobs jobs against $blindJobs")
+    assert(rows.nonEmpty && rows.sameElements(blindRows))
+    // AQE re-applies the rule: the final plan (printed above the initial
+    // one once executed) keeps one partition
+    assert(rangeParts(one) == Seq(1, 1), one.queryExecution.executedPlan.toString)
+    // the streamed side of a broadcast join is the scan's partitions too
+    val langs = docs.select(col("lang")).distinct()
+    val joined = docs.join(broadcast(langs), Seq("lang")).orderBy(col("doc_id"))
+    assert(rangeParts(joined) == Seq(1), joined.queryExecution.executedPlan.toString)
+  }
+
+  test("a wide input keeps its range width and a user range repartition its count") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    def sorted(in: DataFrame) =
+      in.select(col("doc_id"), md5(col("text")).as("h")).orderBy(col("h"), col("doc_id"))
+    val wide = sorted(docs.repartition(4))
+    assert(rangeParts(wide) == Seq(spark.sessionState.conf.numShufflePartitions),
+      wide.queryExecution.executedPlan.toString)
+    assert(sorted(docs).collect().sameElements(wide.collect()),
+      "the one-partition sort changed the rows")
+    val byRange = docs.repartitionByRange(5, col("doc_id"))
+    assert(rangeParts(byRange) == Seq(5), byRange.queryExecution.executedPlan.toString)
+    assert(byRange.rdd.getNumPartitions == 5)
   }
 }

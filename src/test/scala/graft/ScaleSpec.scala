@@ -163,7 +163,7 @@ class ScaleSpec extends SparkSuite {
 
   test("Par.ensure repartitions starved inputs and no-ops healthy ones") {
     val docs = Tables.load(spark, sfDir, "documents") // single-split fixture
-    val want = spark.sessionState.conf.numShufflePartitions
+    val want = spark.sparkContext.defaultParallelism
     val fixed = operators.Par.ensure(docs, col("doc_id"))
     assert(fixed.rdd.getNumPartitions == want,
       s"starved input not widened: ${fixed.rdd.getNumPartitions} != $want")
@@ -171,6 +171,28 @@ class ScaleSpec extends SparkSuite {
     val healthy = docs.repartition(want, col("doc_id"))
     assert(operators.Par.ensure(healthy, col("doc_id")) eq healthy,
       "healthy input was needlessly repartitioned")
+  }
+
+  test("Par.ensure leaves a source of many small files alone") {
+    val docs = Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
+    val many = java.nio.file.Files.createTempDirectory("graft-par-many").toString
+    val one = java.nio.file.Files.createTempDirectory("graft-par-one").toString
+    try {
+      docs.repartition(100).write.mode("overwrite").parquet(many)
+      docs.coalesce(1).write.mode("overwrite").parquet(one)
+      val target = spark.sparkContext.defaultParallelism
+      // 100 files pay 100 open costs: Spark's split planner packs them
+      // into about the cores' worth of partitions
+      val small = spark.read.parquet(many)
+      assert(small.rdd.getNumPartitions * 2 >= target)
+      assert(operators.Par.ensure(small, col("doc_id")) eq small,
+        "a many-small-files source was widened")
+      // the same rows in one file are one split, and widened
+      val single = spark.read.parquet(one)
+      assert(single.rdd.getNumPartitions == 1)
+      assert(operators.Par.ensure(single).rdd.getNumPartitions == target)
+    } finally Seq(many, one).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("saltedEquiJoin equals plain join on a skewed key") {
