@@ -23,10 +23,8 @@ import graft.{functions => f}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // custom whole-operator plans (LogicalPlan + SparkPlan pairs) and the
-    // optimizer rewrite that recognizes the row_number top-k idiom
+    // Spark's row_number WindowGroupLimit runs as bounded heaps
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
     // a sort over a one-partition input skips the range-sampling job
     ext.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRangeSort)
     GraftExtensions.functions.foreach(ext.injectFunction)

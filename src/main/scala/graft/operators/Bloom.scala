@@ -183,24 +183,16 @@ object Bloom {
     // the runtime.bloomFilter session confs (defaults: 4M items, 2^26
     // bits = 8 MB) — at sf100 key sets that would shrink the requested
     // 10 bits/key to ~4.5 and the real FPR far past the documented ~1%.
-    // Raise the caps to the requested size. Deliberately MONOTONIC and
-    // never restored: concurrent builders only ever widen, never shrink
-    // another's in-flight build (a save/restore scope racing a parallel
-    // build could shrink its cap mid-job and silently over-compress its
-    // filter). The widened caps also govern Spark's own injected runtime
-    // filters for the session's later queries — benign (they grow only
-    // up to their OWN requested sizes; the cap is a ceiling, not a
-    // target). A non-numeric user-set conf value parses as "unknown":
-    // widen past it rather than throw.
-    val conf = keys.sparkSession.conf
-    def raise(k: String, v: Long): Unit =
-      if (conf.getOption(k).forall(s =>
-        scala.util.Try(s.trim.toLong).toOption.forall(_ < v))) conf.set(k, v)
-    raise("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", items)
-    raise("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits)
+    // The build runs in a clone of the session whose caps are the
+    // requested size: the caller's session, its concurrent queries and
+    // Spark's own injected runtime filters keep their caps.
+    val capped = Shims.cloneSession(keys.sparkSession, Seq(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> items.toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> bits.toString))
     val agg = new BloomFilterAggregate(
       Shims.expression(keyCol.cast("long")), Literal(items), Literal(bits))
-    keys.select(Shims.column(agg.toAggregateExpression()).as("bf"))
+    Shims.ofRows(capped, keys.queryExecution.logical)
+      .select(Shims.column(agg.toAggregateExpression()).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
 

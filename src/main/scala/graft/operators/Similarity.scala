@@ -9,7 +9,9 @@ import graft.functions._
   *
   * Scale design (100 TB / billions of vectors):
   *  - Brute force: the query set is broadcast (small side), the corpus is
-  *    scanned once; per-partition top-k runs BEFORE any shuffle, so only
+  *    scanned once; the row_number ≤ k idiom plans as partial heaps per
+  *    corpus partition BEFORE the one shuffle on the query id, then final
+  *    heaps ([[graft.plans.TopKPerGroupStrategy]]), so only
   *    numPartitions × |queries| × k candidate rows move — never the corpus.
   *  - IVF: a coarse quantizer (nlist centroids, broadcast) splits the
   *    corpus by nearest centroid; queries probe their nprobe closest
@@ -21,24 +23,28 @@ import graft.functions._
   */
 object Similarity {
 
-  /** Exact top-k by cosine: two-stage (partition-local then global). */
+  /** The `k` best-scoring rows per `q_id` of `scored`, ranked `rn`
+    * 1..k by `score` descending, then `c_id`. The per-partition →
+    * global top-k path: the row_number ≤ k idiom plans as partial heaps
+    * on each scored partition, one exchange on `q_id`, then final heaps
+    * ([[graft.plans.TopKPerGroupStrategy]]). */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored
+      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col(score).desc, col("c_id"))))
+      .filter(col("rn") <= k)
+      .select(col("q_id"), col("c_id"), col(score), col("rn"))
+
+  /** Exact top-k by cosine over the per-partition → global top-k path. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")))
-    val scored = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        spark_partition_id().as("pid"))
+    val scored = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
       .join(q)
-      .select(col("q_id"), col("c_id"), col("pid"),
+      .select(col("q_id"), col("c_id"),
         cosine_similarity(col("q_vec"), col("c_vec")).as("cos"))
       .filter(col("q_id") =!= col("c_id"))
-    val localW = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("cos").desc, col("c_id"))
-    val globalW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    scored
-      .withColumn("lrn", row_number().over(localW)).filter(col("lrn") <= k)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn"))
+    topKPerQuery(scored, "cos", k)
   }
 
   /** Contrastive hard-negative mining — the training-pair prep step for
@@ -46,10 +52,10 @@ object Similarity {
     * candidates inside the band `[lo, hi)`. The upper bound excludes
     * near-duplicates (those are positives — or dedup fodder — not
     * negatives); the lower bound excludes easy negatives the model learns
-    * nothing from. Same two-stage partition-local → global top-k shape as
+    * nothing from. Same per-partition → global top-k path as
     * [[bruteForceTopK]], with the band filter INSIDE the scoring stage's
-    * codegen so only in-band (q_id, c_id, cos) triples reach either
-    * window — at a realistic band that kills ~95% of pairs before any
+    * codegen so only in-band (q_id, c_id, cos) triples reach the partial
+    * heaps — at a realistic band that kills ~95% of pairs before any
     * exchange. At corpus scale, run it over [[Projection]]-compressed
     * vectors or behind an IVF probe like the ANN family.
     */
@@ -58,21 +64,13 @@ object Similarity {
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     val q = broadcast(anchors.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")))
-    val scored = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        spark_partition_id().as("pid"))
+    val scored = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
       .join(q)
-      .select(col("q_id"), col("c_id"), col("pid"),
+      .select(col("q_id"), col("c_id"),
         cosine_similarity(col("q_vec"), col("c_vec")).as("cos"))
       .filter(col("q_id") =!= col("c_id"))
       .filter(col("cos") >= lo && col("cos") < hi)
-    val localW = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("cos").desc, col("c_id"))
-    val globalW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    scored
-      .withColumn("lrn", row_number().over(localW)).filter(col("lrn") <= m)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= m)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn"))
+    topKPerQuery(scored, "cos", m)
   }
 
   /** Deterministic coarse centroids: every (n/nlist)-th vector by id.
@@ -264,15 +262,6 @@ object Similarity {
         1).as("codes"))
   }
 
-  /** PQ ANN top-k by asymmetric distance (ADC), ranking on approximate
-    * inner product. Queries precompute a flat lookup table
-    * lut[mi·B + j] = ⟨q_sub(mi), book(mi)(j)⟩ and broadcast it; the scan
-    * side scores each encoded vector with `transform(codes, (code, mi) ->
-    * lut[mi·B + code])` summed — a per-row table lookup over the m byte
-    * codes, never touching the original floats. Same two-stage
-    * (partition-local then global) top-k as [[bruteForceTopK]], so only
-    * partitions × |queries| × k candidate rows ever shuffle.
-    */
   /** Flat ADC lookup table for one query vector: lut[mi·B + j] =
     * ⟨q_sub(mi), book(mi)(j)⟩, products summed in ascending index order —
     * the exact fold sequence the previous in-plan
@@ -317,29 +306,31 @@ object Similarity {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
+  /** PQ ANN top-k by asymmetric distance (ADC), ranking on approximate
+    * inner product. Queries precompute a flat lookup table
+    * lut[mi·B + j] = ⟨q_sub(mi), book(mi)(j)⟩ and broadcast it; the scan
+    * side scores each encoded vector with `transform(codes, (code, mi) ->
+    * lut[mi·B + code])` summed — a per-row table lookup over the m byte
+    * codes, never touching the original floats. Same per-partition →
+    * global top-k path as [[bruteForceTopK]], so only
+    * partitions × |queries| × k candidate rows ever shuffle.
+    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
       m: Int = 8, ksub: Int = 16,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val books = pqCodebooks(corpus, m, ksub, vecCol, idCol)
     val b = books(0).length
     val enc = pqEncode(corpus, books, vecCol, idCol)
-      .select(col(idCol).as("c_id"), col("codes"), spark_partition_id().as("pid"))
+      .select(col(idCol).as("c_id"), col("codes"))
     val q = broadcast(lutTable(queries, books, vecCol, idCol))
     val scored = enc.join(q)
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), col("pid"),
+      .select(col("q_id"), col("c_id"),
         aggregate(
           transform(col("codes"), (code, mi) =>
             element_at(col("lut"), mi * b + code.cast("int") + 1)),
           lit(0.0), (acc, x) => acc + x).as("score"))
-    val localW = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("score").desc, col("c_id"))
-    val globalW = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id"))
-    scored
-      .withColumn("lrn", row_number().over(localW)).filter(col("lrn") <= k)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("score"), col("rn"))
+    topKPerQuery(scored, "score", k)
   }
 
   /** IVF-PQ: the production billion-vector layout (coarse cells prune the
@@ -361,7 +352,7 @@ object Similarity {
     val corpusCells = assign(corpus, cents, vecCol, idCol, "c", top = 1)
       .select(col("c_id"), col("centroid_id"))
     val enc = pqEncode(corpus, books, vecCol, idCol)
-      .select(col(idCol).as("c_id"), col("codes"), spark_partition_id().as("pid"))
+      .select(col(idCol).as("c_id"), col("codes"))
       .join(corpusCells, Seq("c_id"))
     val lutDf = lutTable(queries, books, vecCol, idCol)
     val queryProbes = assign(queries, cents, vecCol, idCol, "q", top = nprobe)
@@ -370,19 +361,12 @@ object Similarity {
       .select(col("q_id"), col("centroid_id"), col("lut")))
     val scored = enc.join(q, Seq("centroid_id"))
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), col("pid"),
+      .select(col("q_id"), col("c_id"),
         aggregate(
           transform(col("codes"), (code, mi) =>
             element_at(col("lut"), mi * b + code.cast("int") + 1)),
           lit(0.0), (acc, x) => acc + x).as("score"))
-    val localW = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("score").desc, col("c_id"))
-    val globalW = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id"))
-    scored
-      .withColumn("lrn", row_number().over(localW)).filter(col("lrn") <= k)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("score"), col("rn"))
+    topKPerQuery(scored, "score", k)
   }
 
   /** IVF-style ANN top-k: probe `nprobe` of `nlist` coarse cells. */
@@ -392,14 +376,11 @@ object Similarity {
     val cents = centroids(corpus, nlist, vecCol, idCol)
     val corpusAssigned = assign(corpus, cents, vecCol, idCol, "c", top = 1)
     val queryProbes = assign(queries, cents, vecCol, idCol, "q", top = nprobe)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    queryProbes.join(corpusAssigned, Seq("centroid_id"))
+    val scored = queryProbes.join(corpusAssigned, Seq("centroid_id"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         cosine_similarity(col("q_vec"), col("c_vec")).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn"))
+    topKPerQuery(scored, "cos", k)
   }
 
   /** Incremental IVF maintenance: append a fresh batch to an existing

@@ -337,15 +337,11 @@ object Curation {
         .select(col("doc_id"), col("t").as("term"), col("tf"),
           (col("tf") * log(col("n_docs").cast("double") / col("df"))).as("score"))
       import org.apache.spark.sql.expressions.Window
-      // heap-prune to 5/doc with the custom TopKPerGroup operator FIRST
-      // (partial->shuffle->final bounded heaps — the exchange carries
-      // 5·docs rows), then rank the survivors; the row_number window now
-      // sorts 5 rows per doc instead of the full scored table
-      graft.plans.TopKPerGroup(scored, Seq("doc_id"),
-          Seq(col("score").desc, col("term")), k = 5)
+      scored
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("doc_id"))
             .orderBy(col("score").desc, col("term"))))
+        .filter(col("rn") <= 5)
         .select(col("doc_id"), col("term"), col("tf"),
           round(col("score"), 6).as("score"), col("rn"))
         .orderBy(col("doc_id"), col("rn"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.normalize_text
@@ -212,22 +213,21 @@ object Superset {
 
     QuerySpec(
       "topk_per_group",
-      // Custom Catalyst operator (plans/TopKPerGroup.scala): per-group
-      // top-k via partial→shuffle→final bounded heaps — no window sort,
-      // and the exchange carries ≤ k·groups·partitions rows. The oracle
-      // replays the semantics with row_number.
+      // The row_number ≤ k idiom plans as partial→shuffle→final bounded
+      // heaps (plans/TopKPerGroup.scala): no sort of the table, and the
+      // exchange carries ≤ k·groups·partitions rows.
       """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice FROM (
         |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
         |    row_number() OVER (PARTITION BY l_returnflag
         |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
         |  FROM lineitem) x WHERE rn <= 5
         |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
-      graft.plans.TopKPerGroup(
-        t(s, dir, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
-          col("l_linenumber"), col("l_extendedprice")),
-        Seq("l_returnflag"),
-        Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber")),
-        5)
+      t(s, dir, "lineitem")
+        .withColumn("rn", row_number().over(Window.partitionBy(col("l_returnflag"))
+          .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))))
+        .filter(col("rn") <= 5)
+        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+          col("l_extendedprice"))
         .orderBy(col("l_returnflag"), col("l_extendedprice").desc,
           col("l_orderkey"), col("l_linenumber"))
     },

@@ -158,4 +158,19 @@ class BloomSpec extends SparkSuite {
     assert(Bloom.nativePruned(li, col("l_orderkey"), bf).count() === 0L,
       "an empty build side admits no fact rows — the inner join it guards is empty")
   }
+
+  test("nativeKeyBloom sizes past Spark's runtime caps without writing the session's") {
+    val caps = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+    val before = caps.map(spark.conf.getOption)
+    val keys = Tables.load(spark, sfDir, "orders").select(col("o_orderkey"))
+    val bits = 1L << 27 // twice Spark's 8 MB default cap
+    val bf = Bloom.nativeKeyBloom(keys, col("o_orderkey"), 10000000L, bits)
+    assert(caps.map(spark.conf.getOption) == before, "the build wrote the session's caps")
+    val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(bf))
+    assert(filter.bitSize() >= bits, s"filter capped to ${filter.bitSize()} bits")
+    assert(keys.collect().forall(r => filter.mightContainLong(r.getLong(0))),
+      "a built key probes false")
+  }
 }

@@ -3,130 +3,168 @@ package graft
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.TopKPerGroup
+import org.apache.spark.sql.graft.Shims
+import graft.operators.Similarity
 
-/** Specs for the custom Catalyst operator (LogicalPlan + Strategy +
-  * SparkPlan): per-group top-k via bounded heaps; and for the
-  * query-stage rule that ranges a sort over a one-partition input to one
-  * partition ([[graft.plans.OnePartitionRangeSort]]).
+/** Specs for the per-group top-k path (Spark's `WindowGroupLimit` over
+  * `row_number`, planned as bounded heaps by
+  * [[graft.plans.TopKPerGroupStrategy]]); and for the query-stage rule
+  * that ranges a sort over a one-partition input to one partition
+  * ([[graft.plans.OnePartitionRangeSort]]).
   */
 class PlansSpec extends SparkSuite {
 
+  private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
+  private def count(re: String, plan: String): Int = re.r.findAllIn(plan).length
+
+  /** `df` planned in a clone of the session where Spark infers no group
+    * limit: the plain window, the reference for the heap path. */
+  private def plainWindow(df: DataFrame): DataFrame = {
+    val clone = Shims.cloneSession(spark,
+      Seq("spark.sql.optimizer.windowGroupLimitThreshold" -> "-1"))
+    val ref = Shims.ofRows(clone, df.queryExecution.logical)
+    val plan = planOf(ref)
+    assert(!plan.contains("TopKPerGroup") && !plan.contains("WindowGroupLimit"), plan)
+    ref
+  }
+
+  private def lineitem = Tables.load(spark, sfDir, "lineitem")
+    .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+      col("l_extendedprice"))
+
+  private val liOrder =
+    Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
+
+  /** The row_number <= k idiom over lineitem per l_returnflag, with `rn`
+    * in the output or dropped. */
+  private def topLines(k: Int, keepRn: Boolean): DataFrame = {
+    val ranked = lineitem
+      .withColumn("rn", row_number().over(Window.partitionBy(col("l_returnflag"))
+        .orderBy(liOrder: _*)))
+      .filter(col("rn") <= k)
+    (if (keepRn) ranked else ranked.drop("rn"))
+      .orderBy(col("l_returnflag") +: liOrder: _*)
+  }
+
   test("topKPerGroup equals the window row_number formulation") {
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice"))
-    val ours = TopKPerGroup(li, Seq("l_returnflag"),
-      Seq(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber")), 5)
-      .orderBy(col("l_returnflag"), col("l_extendedprice").desc,
-        col("l_orderkey"), col("l_linenumber"))
-      .collect()
-
-    val w = Window.partitionBy(col("l_returnflag"))
-      .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-    val reference = li
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5).drop("rn")
-      .orderBy(col("l_returnflag"), col("l_extendedprice").desc,
-        col("l_orderkey"), col("l_linenumber"))
-      .collect()
-
-    assert(ours.length == reference.length,
-      s"row counts differ: ${ours.length} vs ${reference.length}")
-    assert(ours.sameElements(reference), "rows differ from window formulation")
+    for (keepRn <- Seq(false, true)) {
+      val df = topLines(5, keepRn)
+      assert(planOf(df).contains("TopKPerGroup"), planOf(df))
+      val ours = df.collect()
+      val reference = plainWindow(df).collect()
+      assert(ours.length == reference.length,
+        s"row counts differ: ${ours.length} vs ${reference.length}")
+      assert(ours.sameElements(reference), s"rows differ from window formulation (rn kept: $keepRn)")
+    }
   }
 
   test("topKPerGroup plans partial and final heaps around one exchange") {
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select(col("l_returnflag"), col("l_orderkey"), col("l_extendedprice"))
-    val plan = TopKPerGroup(li, Seq("l_returnflag"),
-      Seq(col("l_extendedprice").desc, col("l_orderkey")), 3)
-      .queryExecution.executedPlan.toString
-    val execs = "TopKPerGroup \\[".r.findAllIn(plan).length
-    assert(execs == 2, s"expected partial+final TopKPerGroupExec, got $execs:\n$plan")
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
-      s"expected exactly one exchange:\n$plan")
-    // map-side partial runs BEFORE the exchange: no full-table shuffle
-    assert(!plan.contains("Window"), s"fell back to a window plan:\n$plan")
+    for (keepRn <- Seq(false, true)) {
+      val ranked = lineitem
+        .withColumn("rn", row_number().over(Window.partitionBy(col("l_returnflag"))
+          .orderBy(liOrder: _*)))
+        .filter(col("rn") <= 3)
+      val plan = planOf(if (keepRn) ranked else ranked.drop("rn"))
+      assert(count("TopKPerGroup \\[", plan) == 2,
+        s"expected partial+final TopKPerGroupExec (rn kept: $keepRn):\n$plan")
+      assert(count("Exchange hashpartitioning", plan) == 1,
+        s"expected exactly one exchange:\n$plan")
+      assert(!plan.contains("WindowGroupLimit"), s"Spark's group limit survived:\n$plan")
+      // the final heap emits rows in the window's order: no sort between
+      assert(!plan.contains("Sort ["), s"a sort was planned over the heaps:\n$plan")
+    }
   }
 
   test("topKPerGroup with no group columns is a global top-k") {
     val orders = Tables.load(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
-    val got = TopKPerGroup(orders, Nil,
-      Seq(col("o_totalprice").desc, col("o_orderkey")), 10)
-      .orderBy(col("o_totalprice").desc, col("o_orderkey")).collect()
-    val expect = orders
-      .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10).collect()
+    val order = Seq(col("o_totalprice").desc, col("o_orderkey"))
+    val got = orders.withColumn("rn", row_number().over(Window.orderBy(order: _*)))
+      .filter(col("rn") <= 10).drop("rn")
+      .orderBy(order: _*).collect()
+    val expect = orders.orderBy(order: _*).limit(10).collect()
     assert(got.sameElements(expect))
   }
 
   test("optimizer rewrites the row_number <= k idiom into TopKPerGroup") {
-    // the suite session sets spark.sql.extensions=graft.GraftExtensions,
-    // so rule + strategy arrive via injection — this is the e2e SQL path
+    // the suite session sets spark.sql.extensions=graft.GraftExtensions:
+    // Spark's InferWindowGroupLimit recognizes the idiom, the injected
+    // strategy plans it — this is the e2e SQL path
     Tables.registerAll(spark, sfDir)
-    val sql =
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem) WHERE rn <= 4
-        |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin
-    val df = spark.sql(sql)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
-    assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
+    def sql(select: String, cond: String) = spark.sql(
+      s"""SELECT $select FROM (
+         |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+         |    row_number() OVER (PARTITION BY l_returnflag
+         |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+         |  FROM lineitem) WHERE $cond
+         |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin)
+    val cols = "l_returnflag, l_orderkey, l_linenumber, l_extendedprice"
+    for (select <- Seq(cols, s"$cols, rn");
+         cond <- Seq("rn <= 4", "rn < 5", "4 >= rn", "rn <= 4 AND rn < 9", "rn = 1")) {
+      val df = sql(select, cond)
+      val plan = planOf(df)
+      assert(count("TopKPerGroup \\[", plan) == 2, s"$select WHERE $cond:\n$plan")
+      assert(!plan.contains("WindowGroupLimit"), s"$select WHERE $cond:\n$plan")
+      assert(df.collect().sameElements(plainWindow(df).collect()),
+        s"$select WHERE $cond differs from the window formulation")
+    }
+  }
 
-    // reference: identical query but rn ESCAPES into the output (a
-    // .drop would collapse into the projection and legitimately re-arm
-    // the rewrite), which must suppress it; rn is stripped driver-side
-    val ref = spark.sql(sql.replace(
-      "SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice FROM (",
-      "SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice, rn FROM ("))
-    assert(ref.queryExecution.executedPlan.toString.contains("Window"),
-      "reference plan unexpectedly rewritten")
-    val refRows = ref.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    val gotRows = df.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    assert(gotRows.sameElements(refRows),
-      "rewritten result differs from the window formulation")
+  test("rank() <= k keeps Spark's WindowGroupLimit") {
+    // ties make rank's k a lower bound on the rows per group, not a size:
+    // the heap does not apply
+    val df = lineitem
+      .withColumn("rk", rank().over(Window.partitionBy(col("l_returnflag"))
+        .orderBy(col("l_extendedprice").desc)))
+      .filter(col("rk") <= 3)
+      .orderBy(col("l_returnflag") +: liOrder: _*)
+    val plan = planOf(df)
+    assert(plan.contains("WindowGroupLimit") && !plan.contains("TopKPerGroup"), plan)
+    assert(df.collect().sameElements(plainWindow(df).collect()))
   }
 
   test("rewrite is overflow-safe: rn < Int.MinValue stays an empty filter") {
     Tables.registerAll(spark, sfDir)
-    // k - 1 on Int.MinValue would wrap to Int.MaxValue and rewrite an
-    // always-false predicate into a top-2-billion query
-    val df = spark.sql(
-      s"""SELECT o_orderkey FROM (
-         |  SELECT o_orderkey, row_number() OVER (ORDER BY o_totalprice) AS rn
-         |  FROM orders) WHERE rn < ${Int.MinValue}""".stripMargin)
-    assert(!df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-      "overflowed bound must not fire the rewrite")
-    assert(df.count() == 0)
+    // k - 1 on Int.MinValue wraps to Int.MaxValue: the bound must still
+    // select nothing, not the whole table
+    for (cond <- Seq(s"rn < ${Int.MinValue}", "rn <= 0")) {
+      val df = spark.sql(
+        s"""SELECT o_orderkey FROM (
+           |  SELECT o_orderkey, row_number() OVER (
+           |    PARTITION BY o_custkey ORDER BY o_totalprice) AS rn
+           |  FROM orders) WHERE $cond""".stripMargin)
+      assert(!planOf(df).contains("TopKPerGroup"), planOf(df))
+      assert(df.count() == 0, cond)
+    }
   }
 
   test("topKPerGroup handles k larger than any group") {
     val nation = Tables.load(spark, sfDir, "nation")
-    val got = TopKPerGroup(nation, Seq("n_regionkey"),
-      Seq(col("n_nationkey")), 1000).count()
-    assert(got == nation.count(), "k > group size must keep every row")
+    def top(k: Int) = nation
+      .withColumn("rn", row_number().over(Window.partitionBy(col("n_regionkey"))
+        .orderBy(col("n_nationkey"))))
+      .filter(col("rn") <= k)
+    // up to Spark's windowGroupLimitThreshold (1000): the heaps
+    for (k <- Seq(10, 1000)) {
+      assert(planOf(top(k)).contains("TopKPerGroup"), planOf(top(k)))
+      assert(top(k).count() == nation.count(), s"k = $k > group size must keep every row")
+    }
+    // above it Spark infers no limit: a plain window
+    val plain = planOf(top(1001))
+    assert(!plain.contains("TopKPerGroup") && !plain.contains("WindowGroupLimit"), plain)
+    assert(top(1001).count() == nation.count(), "k > group size must keep every row")
   }
 
-  test("topKPerGroup resolves group columns case-insensitively by default") {
-    val nation = Tables.load(spark, sfDir, "nation")
-    // the session default is spark.sql.caseSensitive=false — an upper-cased
-    // group name must resolve exactly like df("N_REGIONKEY") does
-    val upper = TopKPerGroup(nation, Seq("N_REGIONKEY"),
-      Seq(col("n_nationkey")), 2)
-    val lower = TopKPerGroup(nation, Seq("n_regionkey"),
-      Seq(col("n_nationkey")), 2)
-    assert(upper.collect().map(_.toString).sorted.toSeq ==
-      lower.collect().map(_.toString).sorted.toSeq)
-    // a genuinely absent column still raises
-    intercept[IllegalArgumentException] {
-      TopKPerGroup(nation, Seq("no_such_col"), Seq(col("n_nationkey")), 2)
-    }
+  test("bruteForceTopK shuffles once: the partial heaps replace a per-partition window") {
+    val embs = Tables.load(spark, sfDir, "embeddings")
+    val df = Similarity.bruteForceTopK(embs, embs.filter(col("vec_id") < 5), k = 10)
+      .orderBy(col("q_id"), col("rn"))
+    val plan = planOf(df)
+    assert(count("Exchange hashpartitioning", plan) == 1, plan)
+    assert(count("Exchange rangepartitioning", plan) == 1, plan)
+    assert(count("TopKPerGroup \\[", plan) == 2, plan)
+    assert(!plan.contains("spark_partition_id") && !plan.contains("WindowGroupLimit"), plan)
+    assert(df.collect().sameElements(plainWindow(df).collect()))
   }
 
   /** `df`'s rows and the number of jobs collecting them ran, read from

@@ -221,13 +221,18 @@ class PropertySpec extends SparkSuite {
         .map { case ((g, v), i) => (g, v, i.toLong) }
       val df = data.toDF("g", "v", "id")
       val order = Seq(col("v").desc_nulls_last, col("id"))
-      val ours = graft.plans.TopKPerGroup(df, Seq("g"), order, k)
-        .orderBy(col("g"), col("v").desc_nulls_last, col("id")).collect()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(order: _*)
-      val ref = df.withColumn("rn", row_number().over(w))
+      val top = df.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k).drop("rn")
-        .orderBy(col("g"), col("v").desc_nulls_last, col("id")).collect()
+        .orderBy(col("g"), col("v").desc_nulls_last, col("id"))
+      assert(top.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+      val ours = top.collect()
+      // the reference: the same query where Spark infers no group limit
+      val plain = org.apache.spark.sql.graft.Shims.cloneSession(spark,
+        Seq("spark.sql.optimizer.windowGroupLimitThreshold" -> "-1"))
+      val ref = org.apache.spark.sql.graft.Shims
+        .ofRows(plain, top.queryExecution.logical).collect()
       assert(ours.length == ref.length && ours.sameElements(ref),
         s"seed=$seedBase k=$k: heap path diverges from window formulation")
     }

@@ -3,14 +3,19 @@
 #
 #   tools/ab.sh <rev> <workload> <pairs> [first_seed]
 #
-# <rev> is checked out into a fresh git worktree, which builds into its own
+# Both sides run from fresh git worktrees of the same layout: <rev> is the
+# base, and a snapshot of this checkout's working tree (`git stash create`:
+# HEAD plus every change to a tracked file, staged or not; HEAD itself when
+# the tree is clean) is the change. Untracked files are not in the
+# snapshot: `git add` a new file before the run. Running the change from
+# the checkout itself cost its side about 7 % of concurrent_sql
+# queries_per_s whichever code it held. Each worktree builds into its own
 # target/: build output is never copied between checkouts (a copied target/
 # let zinc in one checkout delete the other's classes, and the run died
 # with NoClassDefFoundError). Each pair runs `perfbench/run.py --workload
 # <workload>` once on each side with the same seed (first_seed + pair - 1,
 # default first_seed 9001) for BENCHMARK.json's run_seconds; the side that
 # runs first alternates pair by pair, so a drifting host favours neither.
-# This checkout's side runs its working tree as it is.
 #
 # Every result line is appended to target/ab/<workload>-<rev>-<stamp>.jsonl
 # as {"pair", "side", "order", "seed", "rc", "provenance", "result"}. At the
@@ -31,17 +36,24 @@ seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_
 
 mkdir -p "$root/target/ab"
 results="$root/target/ab/$workload-${base_sha:0:12}-$(date -u +%Y%m%dT%H%M%SZ).jsonl"
+change_sha=$(git -C "$root" stash create)
+change_sha=${change_sha:-$(git -C "$root" rev-parse HEAD)}
 base_dir=$(mktemp -d "${TMPDIR:-/tmp}/ab-base.XXXXXX")
+change_dir=$(mktemp -d "${TMPDIR:-/tmp}/ab-change.XXXXXX")
 cleanup() {
-  git -C "$root" worktree remove --force "$base_dir" 2>/dev/null || rm -rf "$base_dir"
+  for dir in "$base_dir" "$change_dir"; do
+    git -C "$root" worktree remove --force "$dir" 2>/dev/null || rm -rf "$dir"
+  done
   git -C "$root" worktree prune
 }
 trap cleanup EXIT
 git -C "$root" worktree add --detach --quiet "$base_dir" "$base_sha"
-echo "ab: base ${base_sha:0:12} in $base_dir, change = $root; results -> $results" >&2
+git -C "$root" worktree add --detach --quiet "$change_dir" "$change_sha"
+echo "ab: base ${base_sha:0:12} in $base_dir, change ${change_sha:0:12} in $change_dir;" \
+  "results -> $results" >&2
 
 # build both sides up front, so no pair's first run follows a compile
-for dir in "$base_dir" "$root"; do
+for dir in "$base_dir" "$change_dir"; do
   (cd "$dir" && python3 -c 'import sys; sys.path.insert(0, "perfbench"); import run; run.build()')
 done
 
@@ -78,9 +90,9 @@ for pair in $(seq 1 "$pairs"); do
   seed=$((first_seed + pair - 1))
   if [ $((pair % 2)) -eq 1 ]; then
     run_one base "$base_dir" "$pair" 1 "$seed"
-    run_one change "$root" "$pair" 2 "$seed"
+    run_one change "$change_dir" "$pair" 2 "$seed"
   else
-    run_one change "$root" "$pair" 1 "$seed"
+    run_one change "$change_dir" "$pair" 1 "$seed"
     run_one base "$base_dir" "$pair" 2 "$seed"
   fi
 done
